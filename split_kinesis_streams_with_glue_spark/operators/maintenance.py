@@ -61,7 +61,6 @@ def compact_small_files(
     footer stats become a tight 2-D bounding box (operators/layout.py).
     Multi-file outputs switch the narrow coalesce for a z-range shuffle of
     just that partition's rows."""
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     report: list[dict] = []
     fs, _, _ = _fs_path(spark, path)
     for part, (n, size) in sorted(file_census(spark, path).items()):
@@ -105,7 +104,8 @@ def compact_small_files(
         else:
             part_df = part_df.coalesce(n_out)
         part_df = part_df.withColumn(col, F.lit(val))
-        part_df.write.mode("overwrite").partitionBy(col).parquet(path)
+        writer = part_df.write.option("partitionOverwriteMode", "dynamic")
+        writer.mode("overwrite").partitionBy(col).parquet(path)
         report.append(
             {"partition": part, "files_before": n, "files_after": n_out}
         )

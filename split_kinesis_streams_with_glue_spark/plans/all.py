@@ -1,309 +1,42 @@
 """Registry assembly — importing this module registers every query family.
 
-Verification-order policy (explicit, per round-1 verdict): the driver
-hash-verifies the FIRST 50 registry entries per round, so ordering is part
-of the evidence plan, not an import accident. ``_VERIFY_PRIORITY`` lists, in
-order, the queries that most need a driver CORRECTNESS row THIS round:
+Verification order is part of the evidence plan: each round's external
+verification run hash-checks the FIRST 50 registry entries (the window)
+against their DuckDB oracles. ``_VERIFY_PRIORITY`` lists the window; every
+other query follows in family registration order.
 
-- round 1 verified registration slots 1-50 (pipeline + core SQL families);
-- round 2 therefore front-loads everything round 1 could not see — the whole
-  extension (dedup/similarity/text/sampling/multimodal) and event/streaming
-  surface plus the SQL tail — with oracle-backed queries before rows-only
-  ones, so any overflow past slot 50 costs only a weaker rows-only check;
-- ``pipeline_training_data_prep`` re-enters the window to prove the oracle
-  HUGEINT cast fix.
+The rule, enforced by two test files:
 
-Queries not named in the priority list (all driver-green in a past round)
-follow in family registration order. Each round the list is REGENERATED
-from the actual never-checked set — ``set(REGISTRY) - keys(CORRECTNESS_r*)``
-— never hand-maintained: round 2's precomputed plan drifted stale (claimed
-40 never-checked; the true count after the late round-2 commits was 54) and
-``tests/test_registry_rotation.py`` now fails the suite if the window would
-leave an oracle-backed query unverified.
+- ``tests/test_registry_rotation.py``: an oracle-backed query with no
+  CORRECTNESS row yet sits in the window (a query registered this round
+  may wait one round), unless ``DEFERRED`` names it;
+- ``tests/test_staleness_sla.py``: every oracle-backed query has a
+  CORRECTNESS row within the last ``ceil(N / 50)`` rounds (N = registry
+  size), judged against the round in flight, or sits in the window or
+  ``DEFERRED``.
 
-ROUND-5 WINDOW (derived by set-diff against CORRECTNESS_r01..r04 — exactly
-43 never-checked entries, all oracle-backed ``since=4``, plus one
-previously-errored query and 6 staleness re-verifications = 50 slots):
+The list is REGENERATED each round from the ``CORRECTNESS_r*.json``
+artifacts at the repo root, never hand-maintained: first the never-checked
+queries, then the stalest newest-row rounds, registration order within a
+round. A new query must prove a new operator or plan shape — at ~370
+queries against a 50-slot window every addition displaces a
+re-verification. Earlier windows and their reasons are in the git history.
 
-1. the 43 oracle-backed round-4 operators that waited one round (the
-   rotation test's planned exemption): the CDC-derived-state family
-   (out-of-order tombstone merge, verified merge, SCD2 incremental,
-   join-view apply/symmetric, fingerprint buckets, Merkle diff,
-   point-in-time join, publish group-atomic, cdc optimize), the ingest
-   monitors (PSI stream/batch, Bloom novelty), the dedup/text wave
-   (incremental LSH index, PPJoin, containment, repeated passages,
-   SimHash-md5, semantic contract, triangle count, BM25, BPE pairs,
-   n-gram novelty, JL projection), the time-series family (interpolate,
-   regression slope, HLL sliding/intersection, co-occurrence lift,
-   Markov, mutual information, CUSUM, Holt, seasonal indices,
-   burstiness), and the profile/agg tail (distribution stats, exact
-   two-pass percentiles, equi-depth histogram, MAD outliers, correlation
-   matrix, CMS-size + Bloom-prefilter join contracts);
-2. ``agg_salted_skew`` — round 4's single red row: rows+schema matched
-   but the raw ``DECIMAL(38,2)`` output column hashed differently across
-   engines (the driver's canonicalizer, not the values — judge re-ran
-   and confirmed value-identical). Re-enters with the sum cast to DOUBLE
-   on BOTH sides per the repo's own ``decimal_money_math`` convention;
-3. 6 staleness re-verifications — family heads from the 25 queries whose
-   only driver row is round 1 (scan, formats, choice, scalar funcs,
-   subqueries, the pandas-UDF surface). The remaining 19 rotate next
-   round, when the never-checked backlog is zero.
+THIS WINDOW (round 15; artifacts r01..r14 — r11 was never produced;
+N = 367, so sla = ceil(367 / 50) = 8):
 
-New round-5 queries are appended AFTER the window, tagged ``since=5`` —
-the "brand-new queries may wait one round" exemption both rotation tests
-encode.
+1. never-checked queries: none;
+2. the 19 oracle-backed queries whose newest CORRECTNESS row is round 6
+   — they aged past the SLA when ``CORRECTNESS_r14.json`` landed
+   (in-flight round 15 > 6 + 8): ``dedup_idf_weighted`` … ``quality_ks_binned``, among them
+   the merger-family ``cdc_rollup_apply``;
+3. the first 31 (registration order) of the 49 oracle-backed r7-newest
+   queries: ``stream_opsmix_monitor`` … ``events_hodges_lehmann``.
 
-ROUND-6 WINDOW (derived by set-diff against CORRECTNESS_r01..r05):
-
-1. the 29 never-checked ``since=5`` registrations (the whole round-5
-   wave — judge-swept green at sf0.01, now needing driver rows);
-2. the 4 round-5 red rows — ``cdc_merge_verified``,
-   ``cdc_join_view_apply``, ``cdc_fingerprint_buckets``,
-   ``cdc_merkle_diff`` — judge-verified value-identical but red on the
-   driver hasher's engine-dependent canonicalization of raw DECIMAL
-   output columns. All four re-enter with checksums cast to BIGINT and
-   money to DOUBLE on BOTH sides (``decimal_money_math`` convention);
-3. ``cdc_join_view_symmetric`` and ``cdc_rollup_apply`` — hashed green
-   in earlier rounds but emit the same raw-DECIMAL class (the driver's
-   decimal handling is value-dependent; the new output-schema guard
-   flagged both); their outputs are now cast to DOUBLE, so the changed
-   queries re-enter;
-4. 15 of the 18 remaining round-1-only queries (staleness zeroing).
-   Deferred to round 7 for lack of slots: ``split_roundtrip_customer``,
-   ``split_stats_customer`` and ``catalog_sql_over_split`` — all three
-   exercise the split/catalog machinery whose sibling queries went
-   green in r4/r5 (``stream_split_customer``, ``formats_csv_roundtrip``).
-
-ROUND-7 WINDOW (derived by set-diff against CORRECTNESS_r01..r06 — the
-precompute above predicted 44 never-checked; the true count grew to 52
-with the late round-6 waves, proving once more why the list is always
-REGENERATED, never hand-maintained):
-
-52 oracle-backed never-checked ``since=6`` registrations cannot fit the
-50-slot window — no ordering satisfies the rotation tests as round 6
-left them.  Round 7 therefore adds the bounded named-deferral mechanism
-the round-6 verdict prescribed (``DEFERRED`` below): the window takes 50
-of the 52, and the 2 overflow picks — chosen lowest-risk by oracle
-strength — join the 3 r1-only staleness deferrals in ``DEFERRED``, each
-with a reason and the round it MUST land.  Round-6 reds: none (50/50
-green).  The 50-slot order groups by family (streaming monitor, SQL
-tail, similarity, text, dedup, sampling/audits, events/time-series,
-quality, capstone) — within the window order carries no meaning; the
-driver checks all 50.
-
-DEFERRAL POLICY (enforced by ``tests/test_registry_rotation.py``):
-``DEFERRED`` is hard-capped at 5 entries; every entry names the round it
-must land (always the NEXT round — multi-round parking is not a valid
-state); re-deferring an entry requires bumping its MUST-land round,
-which the deadline test rejects once the named round arrives, so the
-list shrinks every round by construction.  New queries registered THIS
-round (``since == current``) keep their one-round exemption and are
-never listed here.
-
-REGISTRY-ADDITION BAR (round-6 verdict #7): at ~300 queries against a
-50-slot window, every addition displaces a re-verification.  A new query
-must prove a NEW OPERATOR or a NEW PLAN SHAPE — another composition of
-already-verified primitives does not qualify.  Each round's additions are
-bounded (≤ 15) and each names, in its docstring, the operator/shape it
-exists to prove.
-
-ROUND-8 WINDOW (derived by set-diff against CORRECTNESS_r01..r07 — 17
-never-checked: the 15 ``since=7`` registrations plus the 2 round-7
-window-overflow DEFERRED picks):
-
-1. the 5 round-7 ``DEFERRED`` must-lands (``dedup_lsh_tuning_curve``,
-   ``set_intersect_all``, ``split_roundtrip_customer``,
-   ``split_stats_customer``, ``catalog_sql_over_split``) — their ledger
-   entries are DELETED this round, exactly as the deadline test
-   prescribes; the ledger empties for the first time since it landed;
-2. the 15 ``since=7`` queries whose one-round exemption expires now
-   (all judge-swept green at sf0.01 in the round-7 session);
-3. ``text_script_mix`` — round 7's single red row: rows+schema matched
-   but DuckDB's ``ROUND`` of a tiny negative residue emitted ``-0.0``
-   where Spark's HALF_UP round emitted ``+0.0`` on 157/500 sf0.01 rows
-   — numerically equal, byte-hash different.  Re-enters with ``+ 0.0``
-   canonicalization after every ROUND on BOTH sides (the
-   ``top_principal_component`` pattern, per the round-7 verdict), and
-   ``tests/oracle_harness.py`` now tags ``-0.0`` distinctly so this
-   class can never again pass locally and fail at the driver;
-4. 29 staleness re-verifications — the first 29 (registration order) of
-   the 50 queries whose newest driver row is round 2, including the
-   bench headliners ``dedup_minhash_lsh``/``sim_pairs_topk``.  The
-   remaining 21 r2-stale queries rotate in round 9, inside the SLA
-   (newest=2 ages out only when the in-flight round exceeds 2+sla).
-
-ROUND-9 WINDOW (derived by set-diff against CORRECTNESS_r01..r08 — 15
-never-checked, all the ``since=8`` wave):
-
-1. the 15 ``since=8`` queries whose one-round exemption expires now
-   (all judge-swept green at sf0.01 in the round-8 session, and all 15
-   independently re-verified by the round-8 judge's own parity run);
-2. ``sample_weighted_median`` — round 8's single red row: values
-   bit-identical on both sides (judge-reproduced), but the oracle's
-   ``SUM(wv)`` was the registry's one uncast DuckDB HUGEINT (int128),
-   which the driver's byte-hasher cannot match to Spark's BIGINT.
-   Re-enters with ``CAST(t.tw AS BIGINT)`` — and the new oracle-side
-   result-type guard (``tests/test_output_schemas.py``) now rejects
-   HUGEINT/DECIMAL/LIST/STRUCT oracle outputs registry-wide, fencing
-   on the DuckDB side the class that burned a slot in five rounds
-   (r2/r4/r5-6/r7/r8);
-3. the 21 remaining r2-stale queries (the round-8 docstring's promised
-   rotation): the multimodal/text r2 tail, the 10-query events family,
-   and ``join_asof_attribution``;
-4. 13 staleness re-verifications — the first 13 (registration order)
-   of the 48 queries whose newest driver row is round 3
-   (``cdc_merge_apply`` … ``window_range_frame``).  The remaining 35
-   r3-stale queries rotate in round 10, inside the SLA (newest=3 ages
-   out only when the in-flight round exceeds 3+sla=10 — exactly the
-   round that window covers them).
-
-ROUND-10 WINDOW (derived by set-diff against CORRECTNESS_r01..r09 — 11
-never-checked, all the ``since=9`` wave; zero red rows to re-enter — the
-round-9 window was the rotation regime's first fully-green 50/50):
-
-1. the 11 ``since=9`` queries whose one-round exemption expires now
-   (all judge-swept green at sf0.01 in the round-9 session, and all 11
-   independently re-verified by the round-9 judge's own fresh-plain-
-   session parity run).  ``sample_raking_ipf`` enters FIXED: the
-   round-9 verdict's one defect (the unpinned iteration loop whose
-   executed plan re-embedded the corpus collapse 768×) is closed by
-   pinning the bounded cell frame per scaling step — the
-   ``global_rank``/q2/minhash ``localCheckpoint`` idiom — and the new
-   scan-multiplicity lint gate (``plans/lint.py``) fences the class
-   registry-wide;
-2. the 35 remaining r3-stale queries (the round-9 docstring's promised
-   rotation): the 19-query TPC-H block ``q2/q4/q6–q22`` plus
-   ``join_interval_bucketed``, ``agg_histogram``,
-   ``subquery_lateral_topn``, the ANN-contract trio, ``sample_dsir_scores``,
-   ``text_c4_clean``, ``sample_token_budget``, ``dedup_fuzzy_names``,
-   ``dedup_cluster_best``, and the 6-query r3 events tail;
-3. 4 staleness re-verifications — the first 4 oracle-backed r4-newest
-   queries in registration order (``cdc_compact_customer``,
-   ``stream_split_customer``, ``q1_pricing_summary``,
-   ``agg_count_distinct``).  The remaining 45 r4-stale queries rotate
-   in rounds 11–12, inside the SLA.
-
-New round-10 queries are appended AFTER the window, tagged
-``since=10`` (10 registrations — at the round-9 verdict's ≤10 bar):
-``quality_brown_forsythe``, ``quality_theil_u``,
-``quality_cochran_armitage``, ``text_yule_k``, ``text_heaps_law``,
-``sim_calinski_harabasz``, ``events_cross_correlation``,
-``events_haar_energy``, ``multimodal_phash_buckets``,
-``sample_systematic_interval``.  They carry the standard one-round
-exemption and MUST occupy round-11 window slots (the rotation test
-enforces it the moment ``CORRECTNESS_r10.json`` lands).
-
-ROUND-11 WINDOW (derived by set-diff against CORRECTNESS_r01..r10 — 10
-never-checked, all the ``since=10`` wave; zero red rows to re-enter —
-round 10 was the second consecutive fully-green 50/50):
-
-1. the 10 ``since=10`` queries whose one-round exemption expires now
-   (all judge-swept green at sf0.01 in the round-10 session, and all 10
-   independently re-verified by the round-10 judge's own fresh-plain-
-   session parity run — 10/10 MATCH, 0–6 FileScans each);
-2. 40 staleness re-verifications from the 45 queries whose newest
-   driver row is round 4 — the exact slate the round-10 verdict names
-   (item 1): the agg tail (cube/rollup/grouping-sets/stats/listagg),
-   the 7 r1-vintage join shapes, the 4 window functions, ``topk_orders``,
-   the 4 set ops, the r4 dedup/events/text/layout/profile/pipeline/
-   quality/sample/maintenance/multimodal rows.  The remaining 5 r4-stale
-   queries (``percentiles_approx``, ``dedup_simhash``,
-   ``sim_ann_ivf_topk``, ``sim_ann_lsh_topk``, ``dedup_semantic``)
-   rotate in round 12, inside the SLA (newest=4 ages out only when the
-   in-flight round exceeds 4 + sla=7 = 11 — i.e. round 12's window must
-   and will cover them; DEFERRED stays empty because the SLA test's own
-   arithmetic already schedules them).
-
-ROUND-12 WINDOW (derived by set-diff against CORRECTNESS_r01..r10 —
-**the driver never produced ``CORRECTNESS_r11.json``**, a first; the
-round-11 verdict confirms the artifact was simply not written even
-though the judge's own fresh-session run re-proved the at-risk queries.
-Consequence: the round-11 window's 50 slots — 10 ``since=10`` + 40
-r4-stale re-verifications — have NO driver rows, so the true set-diff
-now shows 18 never-checked (10 ``since=10`` + 8 ``since=11``) and the
-45 r4-stale queries still stale.  The slate the round-11 verdict
-prescribed for this round assumed r11 had landed; per the standing rule
-(the list is always REGENERATED from the artifacts, never
-hand-maintained), this window follows the actual artifacts instead):
-
-1. the 8 ``since=11`` registrations (never checked; all 8 judge-verified
-   MATCH in the round-11 fresh-plain-session run):
-   ``events_ljung_box``, ``events_runs_test``, ``events_hurst_rs``,
-   ``events_permutation_entropy``, ``quality_mcnemar``,
-   ``quality_jonckheere``, ``text_burrows_delta``,
-   ``multimodal_phash_pairs``;
-2. the 10 ``since=10`` registrations (their one-round exemption expired
-   at round 11, but the missing artifact means they are STILL never
-   checked; all 10 were judge-parity-green in the round-10 session);
-3. the 6 rows-only sketches — the stalest evidence rows in the registry
-   (``agg_approx_count_distinct`` r1-newest; ``percentiles_approx``,
-   ``dedup_simhash``, ``dedup_semantic``, ``sim_ann_ivf_topk``,
-   ``sim_ann_lsh_topk`` r4-newest) — the round-11 verdict's explicit
-   pick (item 2);
-4. 26 staleness re-verifications: the first 26 (registration order) of
-   the 40 oracle-backed r4-newest queries (``agg_cube`` …
-   ``events_quantile_sketch_contract``).
-
-The 14 oracle-backed r4-stale leftovers (``events_stream_topk`` …
-``sample_weighted_pps``) CANNOT fit: 18 never-checked is forced by the
-rotation tests and 18 + 6 + 40 = 64 > 50.  They age past the SLA the
-moment ``CORRECTNESS_r12.json`` lands (newest=4 ages out when the
-in-flight round exceeds 4 + sla=8 = 12), so the SLA test will turn red
-at that instant and round 13's first commit MUST window them — exactly
-the forcing behavior the test was built for; the red is the visible
-record of the driver's skipped round, not a silent parking.  The 45
-r5-stale queries stay inside the SLA (newest=5 ages out only when the
-in-flight round exceeds 13) and rotate in rounds 13–14.
-
-ROUND-13 WINDOW (derived by set-diff against CORRECTNESS_r01..r12 —
-``CORRECTNESS_r12.json`` landed 50/50 green, so the set-diff shows
-exactly 4 never-checked queries, the ``since=12`` wave):
-
-1. the 4 ``since=12`` registrations (never checked; all 4 judge-MATCH
-   in the round-12 fresh-plain-session run): ``graph_kcore_copurchase``,
-   ``retrieval_rank_agreement``, ``events_aov_periodogram``,
-   ``events_changepoint_bridge``;
-2. the 14 oracle-backed r4-stale leftovers the round-12 docstring
-   scheduled here — newest=4 aged past the SLA the moment
-   ``CORRECTNESS_r12.json`` landed (in-flight round 13 > 4 + sla=8), so
-   the SLA test armed red exactly as designed and this window clears it:
-   ``multimodal_frame_sample`` … ``pipeline_entity_resolution``
-   (registration order);
-3. 32 staleness re-verifications: the first 32 (registration order) of
-   the 45 oracle-backed r5-newest queries (``choice_resolution_totalprice``
-   … ``events_mutual_information``).  The 13 r5 leftovers
-   (``events_cusum_changepoint`` … ``agg_correlation_matrix``) CANNOT
-   fit (4 + 14 + 45 = 63 > 50); newest=5 ages out the moment
-   ``CORRECTNESS_r13.json`` lands (in-flight round 14 > 5 + sla=8), so
-   the SLA test forces them into round 14's first commit — the same
-   documented forcing behavior, and the r6-stale tranche (50 queries)
-   begins rotating right behind them.  DEFERRED stays empty because the
-   SLA arithmetic itself schedules the leftovers.
-
-ROUND-14 WINDOW (derived by set-diff against CORRECTNESS_r01..r13 —
-``CORRECTNESS_r13.json`` landed 50/50 green, arming both designed gates
-exactly as the round-13 docstring scheduled):
-
-1. the 6 ``since=13`` wave registrations (never checked — they were
-   committed AFTER round 13's window regeneration, so the rotation test
-   armed the moment ``CORRECTNESS_r13.json`` landed):
-   ``graph_label_prop_communities``, ``retrieval_rbo``,
-   ``retrieval_mrr_recall``, ``events_pettitt_changepoint``,
-   ``quality_cronbach_alpha``, ``quality_mood_median``;
-2. the 13 oracle-backed r5-stale leftovers the round-13 docstring
-   scheduled here — newest=5 aged past the SLA the moment
-   ``CORRECTNESS_r13.json`` landed (in-flight round 14 > 5 + sla=8):
-   ``events_cusum_changepoint`` … ``agg_correlation_matrix``
-   (registration order);
-3. 31 staleness re-verifications: the first 31 (registration order) of
-   the 50 oracle-backed r6-newest queries (``split_flatten_orders_ts``
-   … ``pipeline_dataset_card``).  The 19 r6 leftovers
-   (``dedup_idf_weighted`` … ``quality_ks_binned``) CANNOT fit (6 + 13 + 50 = 69 >
-   50); newest=6 ages out the moment ``CORRECTNESS_r14.json`` lands
-   (in-flight round 15 > 6 + sla=8), so the SLA test forces them into
-   round 15's first commit — the same documented forcing behavior.
-   DEFERRED stays empty because the SLA arithmetic itself schedules the
-   leftovers.
+19 + 31 = 50. The 18 r7 leftovers (``events_funnel_latency`` …
+``quality_functional_deps``) age out when ``CORRECTNESS_r15.json`` lands
+(in-flight round 16 > 7 + 8), so round 16's window takes them first.
+``DEFERRED`` stays empty: the SLA arithmetic itself schedules them.
 """
 
 from __future__ import annotations
@@ -318,85 +51,67 @@ import split_kinesis_streams_with_glue_spark.plans.scale_queries  # noqa: F401
 from split_kinesis_streams_with_glue_spark.plans.registry import REGISTRY, QuerySpec
 
 _VERIFY_PRIORITY: list[str] = [
-    # --- the 6 since=13 wave registrations (never checked — committed
-    # after round 13's window regeneration; the rotation test armed the
-    # moment CORRECTNESS_r13.json landed) ---
-    "graph_label_prop_communities",
-    "retrieval_rbo",
-    "retrieval_mrr_recall",
-    "events_pettitt_changepoint",
-    "quality_cronbach_alpha",
-    "quality_mood_median",
-    # --- the 13 oracle-backed r5-stale leftovers the SLA test forced
-    # into this window the moment CORRECTNESS_r13.json landed (the
-    # round-13 docstring's scheduled arithmetic; registration order) ---
-    "events_cusum_changepoint",
-    "events_holt_trend",
-    "events_hll_intersection",
-    "agg_distribution_stats",
-    "events_seasonal_indices",
-    "events_burstiness",
-    "join_cms_size_contract",
-    "join_bloom_prefilter",
-    "agg_salted_skew",
-    "percentiles_exact_twopass",
-    "agg_equidepth_histogram",
-    "quality_mad_outliers",
-    "agg_correlation_matrix",
-    # --- 31 staleness re-verifications: the first 31 (registration
-    # order) of the 50 oracle-backed r6-newest queries.  The 19
-    # leftovers (dedup_idf_weighted ... quality_ks_binned) are forced
-    # into round 15's window by the SLA test the moment
-    # CORRECTNESS_r14.json lands (see the docstring).  Within the
-    # window order carries no meaning — the driver checks all 50. ---
-    "split_flatten_orders_ts",
-    "schema_drift_merge",
-    "cdc_scd2_customer",
-    "split_multi_table",
-    "formats_orc_roundtrip",
-    "cdc_fingerprint_buckets",
-    "cdc_merkle_diff",
-    "cdc_merge_verified",
-    "cdc_join_view_apply",
-    "cdc_join_view_symmetric",
-    "stream_ewma_monitor",
-    "stream_quality_monitor",
-    "date_funcs",
-    "math_funcs",
-    "decimal_money_math",
-    "json_extract_props",
-    "from_json_struct",
-    "explode_words",
-    "array_hof_embedding_norm",
-    "array_contains_filter",
-    "subquery_in",
-    "subquery_correlated_exists",
-    "quality_gopher_rules",
-    "text_zipf_slope",
-    "text_tokenizer_fertility",
-    "dedup_clustering_coeff",
-    "sim_knn_classify",
-    "text_bigram_logprob",
-    "dedup_component_sizes",
-    "sample_soft_dedup_weights",
-    "pipeline_dataset_card",
+    # --- the 19 oracle-backed r6-newest queries: past the SLA since
+    # CORRECTNESS_r14.json landed (registration order) ---
+    "dedup_idf_weighted",
+    "text_char_entropy",
+    "text_js_divergence",
+    "text_mattr",
+    "events_acf",
+    "events_theil_sen",
+    "events_stl_decompose",
+    "join_asof_nearest",
+    "events_entropy_rate",
+    "events_peak_days",
+    "cdc_rollup_apply",
+    "quality_benford_digits",
+    "join_dpp_dates",
+    "quality_winsorize",
+    "quality_l_diversity",
+    "agg_bootstrap_ci",
+    "sample_neyman_allocation",
+    "quality_chi2_independence",
+    "quality_ks_binned",
+    # --- the first 31 (registration order) of the 49 oracle-backed
+    # r7-newest queries; the other 18 fall due in round 16 ---
+    "stream_opsmix_monitor",
+    "agg_mode_segment",
+    "agg_conditional_surface",
+    "sim_centroid_purity",
+    "text_flesch_reading_ease",
+    "dedup_source_overlap",
+    "sample_ess_weights",
+    "text_mojibake_scan",
+    "dedup_tfidf_cosine",
+    "sim_sample_diversity",
+    "text_term_burstiness",
+    "pipeline_source_scorecard",
+    "text_ngram_coverage",
+    "text_pmi_pairs",
+    "sample_exact_k",
+    "sample_kfold_counts",
+    "sample_split_balance_contract",
+    "sim_hard_negatives",
+    "sim_norm_audit",
+    "sim_knn_margin",
+    "dedup_cluster_diameter",
+    "text_lang_confusion",
+    "quality_duplicate_impact",
+    "pipeline_training_manifest",
+    "events_mann_kendall",
+    "events_spearman_daily",
+    "events_gini_daily",
+    "events_kendall_tau",
+    "events_rolling_zscore",
+    "events_user_accretion",
+    "events_hodges_lehmann",
 ]
 
-# Bounded named-deferral list (round-6 verdict #1): queries that WILL NOT
-# get a driver CORRECTNESS row this round, each with the reason and the
-# round it MUST land.  Hard cap 5 (tests/test_registry_rotation.py);
+# Bounded named-deferral list: queries that WILL NOT get a CORRECTNESS
+# row this round, each with the reason and the round it MUST
+# land ("MUST land round N"). Hard cap 5 (tests/test_registry_rotation.py);
 # deferral is one round only — the deadline test turns red the moment the
 # named round's driver artifact would be due, so entries cannot be parked.
-# Re-deferral requires bumping the MUST-land round, which the same test
-# rejects once the named round arrives: the list shrinks every round.
-#
-# ROUND 8: empty — all 5 round-7 entries landed in that round's window
-# (slots 1-5) and were deleted, exactly as the deadline test prescribes.
-# ROUND 9: stays empty — the 50-slot arithmetic covers the whole backlog
-# (15 since=8 + 1 re-entry + 21 r2-stale + 13 r3-stale heads).
-# ROUND 10: stays empty — 11 since=9 + 35 r3-stale + 4 r4 heads = 50.
-# ROUND 11: stays empty — 10 since=10 + 40 r4-stale = 50; the 5 r4
-# leftovers are scheduled by the SLA arithmetic itself (due round 12).
 DEFERRED: dict[str, str] = {}
 
 

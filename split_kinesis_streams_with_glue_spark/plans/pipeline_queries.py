@@ -1412,9 +1412,9 @@ def pipeline_cdc_optimize(spark, sf_dir):
     # fragment each bucket into many small files — the state a streaming
     # merger reaches after enough triggers (AQE keeps the 3-epoch fixture
     # run too tidy to show it naturally)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     frag = spark.read.parquet(f"{base}/tbl").repartition(16).localCheckpoint()
-    frag.write.mode("overwrite").partitionBy("__bucket").parquet(f"{base}/tbl")
+    writer = frag.write.option("partitionOverwriteMode", "dynamic")
+    writer.mode("overwrite").partitionBy("__bucket").parquet(f"{base}/tbl")
     report = compact_small_files(spark, f"{base}/tbl", min_files=4)
     assert report, "compaction rewrote nothing — fixture didn't fragment"
     return read_table(spark, f"{base}/tbl")

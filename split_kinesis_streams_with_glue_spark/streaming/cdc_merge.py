@@ -40,14 +40,16 @@ Scale notes:
   The merge itself is also idempotent (same input ⇒ same winners), so the
   marker only saves wasted work on the non-crash path; the crash window
   between data write and marker write re-merges one epoch harmlessly.
+
+The on-disk layout — dirty-bucket dynamic overwrite, the ``_schema``
+sidecar, the emptied-bucket sweep, and the rule that a key's bucket
+column is immutable — is ``streaming/state_table.py``'s contract; every
+writer and reader here goes through it.
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -57,12 +59,10 @@ from split_kinesis_streams_with_glue_spark.operators.compact import (
     scd2_history,
 )
 from split_kinesis_streams_with_glue_spark.operators.split import split_one
+from split_kinesis_streams_with_glue_spark.streaming import state_table
 from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    _fs as _fs_path,
     read_marker,
-    read_text_marker,
     write_marker,
-    write_text_marker,
 )
 
 META_COLS = ("timestamp", "operation", "__bucket")
@@ -107,7 +107,6 @@ def make_cdc_merger(
         last = read_marker(spark, marker)
         if last is not None and epoch_id <= last:
             return  # replayed epoch — already applied
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # prune=False: batch-local all-null column pruning would make the
         # stored schema depend on which batch wrote first
         rows = event_time(
@@ -120,43 +119,13 @@ def make_cdc_merger(
                 F.lit(num_buckets),
             ),
         )
-        stored = None
-        try:
-            # Prefer the _schema sidecar over mergeSchema inference: the
-            # sidecar records the last epoch's merged schema, which is the
-            # UNION of every column ever written (merge schemas never
-            # shrink), so an explicit-schema read sees exactly what
-            # mergeSchema would — without the per-epoch footer sweep over
-            # every file of the table (a full file-listing job at scale).
-            # Buckets written before a drift lack the newer columns and
-            # null-fill; a crashed epoch's files written AFTER a drift but
-            # before the sidecar update lose the new column only for this
-            # replay, which rewrites those same dirty buckets from the
-            # replayed delta — convergent either way. Tables from before
-            # the sidecar existed fall back to mergeSchema.
-            schema_json = read_text_marker(spark, f"{path}/_schema")
-            if schema_json is not None:
-                stored = spark.read.schema(
-                    StructType.fromJson(json.loads(schema_json))
-                ).parquet(path)
-            else:
-                stored = spark.read.option("mergeSchema", "true").parquet(path)
-        except AnalysisException as exc:
-            # Only a genuinely-absent table is a first batch. Any OTHER
-            # analysis error (e.g. incompatible type drift) must fail the
-            # batch so the stream retries — falling back to pool = delta
-            # would dynamic-overwrite every dirty bucket with the delta
-            # alone, silently dropping their stored rows.
-            cond = (
-                exc.getCondition()
-                if hasattr(exc, "getCondition")
-                else exc.getErrorClass()
-            )
-            if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise
+        # None only when nothing was ever written at path: the first batch.
+        # Any other read failure (e.g. incompatible type drift across
+        # bucket files) propagates and fails the batch so the stream
+        # retries — treating it as pool = delta would dynamic-overwrite
+        # every dirty bucket with the delta alone, dropping stored rows.
+        stored = state_table.read(spark, path)
         if stored is not None and compat_policy is not None:
-            from pyspark.sql.types import StructType as _ST
-
             from split_kinesis_streams_with_glue_spark.schema.compat import (
                 compatibility,
             )
@@ -165,7 +134,7 @@ def make_cdc_merger(
             # (event time, operation, bucket) are engine artifacts whose
             # types/nullability vary by code path, not producer drift
             def _payload(schema):
-                return _ST([f for f in schema.fields if f.name not in META_COLS])
+                return StructType([f for f in schema.fields if f.name not in META_COLS])
 
             verdict = compatibility(_payload(stored.schema), _payload(delta.schema))
             if verdict not in compat_policy:
@@ -199,49 +168,20 @@ def make_cdc_merger(
             # allowMissingColumns: a column added (or dropped) mid-stream
             # null-fills on the side that lacks it instead of being dropped
             pool = stored.filter(
-                F.col("__bucket").isin([int(b) for b in dirty_ids])
+                F.col("__bucket").isin(list(dirty_ids))
             ).unionByName(delta, allowMissingColumns=True)
-        # The parquet write below IS the materialization of the merge —
-        # write FIRST and let every later consumer (the emptied-bucket
-        # sweep's census, on_merged) read the written files back instead of
-        # paying a localCheckpoint of the whole merged pool per epoch
-        # (r14: one full extra materialization removed; jobs/epoch 11 -> 7,
-        # outputs byte-identical).
+        # The parquet write IS the materialization of the merge: on_merged
+        # reads the written dirty buckets back instead of paying a
+        # localCheckpoint of the whole merged pool per epoch.
         merged = compact(pool, pk_cols, drop_meta=False, keep_deletes=out_of_order)
-        merged_schema = merged.schema
-        # The surviving-bucket census rides the write itself as an observed
-        # metric (collect_set over <= num_buckets values) — no separate job.
-        obs = Observation(f"cdc-surviving-{table}-{epoch_id}")
-        observed = merged.observe(obs, F.collect_set("__bucket").alias("buckets"))
-        observed.write.mode("overwrite").partitionBy("__bucket").parquet(path)
-        # Dynamic overwrite only replaces partitions PRESENT in the output:
-        # a batch whose deletes empty an entire dirty bucket emits no rows
-        # for it, so its stale __bucket=N directory would survive on disk
-        # and the deleted rows would resurrect in read_table. Drop those
-        # emptied partitions explicitly (the observed census is
-        # metadata-sized: ≤ num_buckets values).
-        surviving = {int(b) for b in obs.get["buckets"]}
-        for bucket in sorted(dirty_ids - surviving):
-            fs, part, _ = _fs_path(spark, f"{path}/__bucket={bucket}")
-            fs.delete(part, True)
-        # Schema sidecar: if deletes empty the WHOLE table there are no data
-        # files left to infer a schema from; read_table falls back to this
-        # marker so an empty table reads as 0 rows with the last schema.
-        write_text_marker(spark, f"{path}/_schema", merged_schema.json())
+        surviving = state_table.write(merged, path, dirty_ids)
         if on_merged is not None:
-            # Derived-state writers see this epoch's merged rows by reading
-            # back exactly the dirty buckets just written (partition-pruned,
-            # column-prunable — cheaper than holding the full-width
-            # checkpoint), with the explicit schema so the __bucket
-            # partition column keeps its written type.
-            if surviving:
-                back = (
-                    spark.read.schema(merged_schema)
-                    .parquet(path)
-                    .filter(F.col("__bucket").isin([int(b) for b in dirty_ids]))
-                )
-            else:
-                back = spark.createDataFrame([], merged_schema)
+            # partition-pruned, column-prunable read-back of exactly the
+            # dirty buckets just written; the sidecar keeps the __bucket
+            # partition column at its written type
+            back = state_table.read(spark, path).filter(
+                F.col("__bucket").isin(list(dirty_ids))
+            )
             on_merged(back, dirty_ids, surviving)
         write_marker(spark, marker, epoch_id)
 
@@ -268,19 +208,22 @@ def cdc_merge_stream(
     )
 
 
+def _stored(spark, path: str) -> DataFrame:
+    """The state table at ``path`` for a user-facing read; a table no
+    epoch has written yet is an error, not an empty result."""
+    df = state_table.read(spark, path)
+    if df is None:
+        raise FileNotFoundError(f"no state table at {path}")
+    return df
+
+
 def read_table(spark, path: str) -> DataFrame:
     """The user-facing materialized table (merge bookkeeping columns
-    dropped). The ``_schema`` sidecar (recorded by the merger after every
-    data write) is the preferred schema source: it equals what mergeSchema
-    would infer (merge schemas only ever grow) without the footer sweep
-    over every file, and it also covers a table whose rows were ALL
-    deleted (no data files to infer from). Pre-sidecar tables fall back
-    to mergeSchema inference."""
-    schema_json = read_text_marker(spark, f"{path}/_schema")
-    if schema_json is not None:
-        df = spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(path)
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(path)
+    dropped), read through ``state_table.read``: the ``_schema`` sidecar
+    equals what mergeSchema would infer without the footer sweep over
+    every file, and it keeps a table whose rows were ALL deleted readable
+    as zero rows."""
+    df = _stored(spark, path)
     if "operation" in df.columns:
         # out-of-order tables store delete tombstones; they are merge
         # bookkeeping, not user rows (no-op on ordered tables)
@@ -314,19 +257,12 @@ def make_cdc_rollup_merger(
     ``value_expr`` for engine-exact money sums)."""
 
     def on_merged(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
-        spark = merged.sparkSession
         partials = merged.groupBy("__bucket", *group_cols).agg(
             F.count(F.lit(1)).alias("n"), F.sum(value_expr).alias("total")
         )
-        partials.write.mode("overwrite").partitionBy("__bucket").parquet(agg_path)
-        # buckets emptied by deletes leave no partial rows either — drop
-        # their stale agg partitions just like the row table's; the schema
-        # sidecar keeps a fully-emptied agg table readable as zero rows
-        write_text_marker(spark, f"{agg_path}/_schema", partials.schema.json())
-        for bucket in sorted(dirty_ids - surviving):
-            fs, part, _ = _fs_path(spark, f"{agg_path}/__bucket={bucket}")
-            if fs.exists(part):
-                fs.delete(part, True)
+        # buckets emptied by deletes leave no partial rows either — the
+        # write sweeps their stale agg partitions like the row table's
+        state_table.write(partials, agg_path, dirty_ids)
 
     return make_cdc_merger(path, table, pk_cols, num_buckets, on_merged=on_merged)
 
@@ -334,21 +270,13 @@ def make_cdc_rollup_merger(
 def read_rollup(spark, agg_path: str, group_cols: list[str]) -> DataFrame:
     """The user-facing aggregate view: fold the per-bucket partials. The
     scan is the partial table (bounded by num_buckets x |groups|), never
-    the row table. Falls back to the ``_schema`` sidecar when deletes have
-    emptied every partial partition (same contract as ``read_table``)."""
-    # sidecar-first for the same reason as read_table: no inference job
-    schema_json = read_text_marker(spark, f"{agg_path}/_schema")
-    if schema_json is not None:
-        partials = spark.read.schema(
-            StructType.fromJson(json.loads(schema_json))
-        ).parquet(agg_path)
-    else:
-        partials = spark.read.parquet(agg_path)
+    the row table. A partial table that deletes emptied reads as zero rows
+    (same contract as ``read_table``)."""
+    partials = _stored(spark, agg_path)
     return (
         partials.groupBy(*group_cols)
         .agg(F.sum("n").cast("bigint").alias("n"), F.sum("total").alias("total"))
     )
-
 
 
 def expire_tombstones(spark, path: str, older_than: str) -> int:
@@ -365,8 +293,8 @@ def expire_tombstones(spark, path: str, older_than: str) -> int:
     only, and the rewrite is dirty-buckets only — the vacuum never touches
     the clean majority of a large table."""
     cutoff = F.to_timestamp(F.lit(older_than))
-    stored = spark.read.option("mergeSchema", "true").parquet(path)
-    if "operation" not in stored.columns:
+    stored = state_table.read(spark, path)
+    if stored is None or "operation" not in stored.columns:
         return 0
     expired = (F.col("operation") == "delete") & (F.col("timestamp") < cutoff)
     census = (
@@ -377,21 +305,10 @@ def expire_tombstones(spark, path: str, older_than: str) -> int:
     )  # metadata-sized: ≤ num_buckets rows
     if not census:
         return 0
-    dirty = [int(r["__bucket"]) for r in census]
-    dropped = sum(int(r["n"]) for r in census)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    kept = (
-        stored.filter(F.col("__bucket").isin(dirty))
-        .filter(~expired)
-        .localCheckpoint(eager=True)
-    )
-    kept.write.mode("overwrite").partitionBy("__bucket").parquet(path)
-    surviving = {r[0] for r in kept.select("__bucket").distinct().collect()}
-    for bucket in sorted(set(dirty) - surviving):
-        fs, part, _ = _fs_path(spark, f"{path}/__bucket={bucket}")
-        if fs.exists(part):
-            fs.delete(part, True)
-    return dropped
+    dirty = {int(r["__bucket"]) for r in census}
+    kept = stored.filter(F.col("__bucket").isin(list(dirty))).filter(~expired)
+    state_table.write(kept, path, dirty)
+    return sum(int(r["n"]) for r in census)
 
 
 def make_fingerprinted_merger(
@@ -419,34 +336,17 @@ def make_fingerprinted_merger(
     from split_kinesis_streams_with_glue_spark.operators.diff import row_hash_expr
 
     def on_merged(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
-        spark = merged.sparkSession
         live = merged.filter(F.col("operation") != "delete")  # skip tombstones
         fp = (
             live.select("__bucket", row_hash_expr(repr_cols).alias("__h"))
             .groupBy("__bucket")
             .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("__h").alias("checksum"))
         )
-        fp.write.mode("overwrite").partitionBy("__bucket").parquet(fp_path)
-        write_text_marker(spark, f"{fp_path}/_schema", fp.schema.json())
-        # Sweep fingerprint partitions for dirty buckets absent from the
-        # FINGERPRINT output, not from the row table: out-of-order mode
-        # keeps tombstones, so a bucket whose live rows were all deleted is
-        # still in `surviving` (its tombstones survive) yet emits no fp
-        # rows — sweeping dirty_ids - surviving would leave its stale
-        # fingerprint behind and the certificate would over-count. In
-        # ORDERED mode merged carries no tombstones (keep_deletes=False), so
-        # live == merged and the fp census is exactly `surviving` — reuse it
-        # instead of re-running the fingerprint aggregate for a ≤ num_buckets
-        # row collect (one job per epoch saved; r13 optimization).
-        present = (
-            surviving
-            if not out_of_order
-            else {r[0] for r in fp.select("__bucket").distinct().collect()}
-        )
-        for bucket in sorted(dirty_ids - present):
-            fs, part, _ = _fs_path(spark, f"{fp_path}/__bucket={bucket}")
-            if fs.exists(part):
-                fs.delete(part, True)
+        # The sweep keys on the FINGERPRINT output, not on the row table's
+        # survivors: out-of-order mode keeps tombstones, so a bucket whose
+        # live rows were all deleted still survives in the row table yet
+        # emits no fp rows — its stale fingerprint must still go.
+        state_table.write(fp, fp_path, dirty_ids)
 
     return make_cdc_merger(
         path, table, pk_cols, num_buckets, on_merged=on_merged, out_of_order=out_of_order
@@ -459,13 +359,7 @@ def read_fingerprint(spark, fp_path: str) -> DataFrame:
     against its own recomputation. Scans only the summary table
     (≤ num_buckets rows). Sidecar-first like ``read_table`` — no
     inference job."""
-    schema_json = read_text_marker(spark, f"{fp_path}/_schema")
-    if schema_json is not None:
-        partials = spark.read.schema(
-            StructType.fromJson(json.loads(schema_json))
-        ).parquet(fp_path)
-    else:
-        partials = spark.read.parquet(fp_path)
+    partials = _stored(spark, fp_path)
     return partials.agg(
         F.sum("n_rows").cast("bigint").alias("n_rows"),
         F.sum("checksum").cast("decimal(38,0)").alias("checksum"),
@@ -498,7 +392,6 @@ def make_scd2_merger(
         last = read_marker(spark, marker)
         if last is not None and epoch_id <= last:
             return
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         delta = event_time(
             split_one(env_batch, table, keep_operation=True, prune=False)
         ).withColumn(
@@ -508,61 +401,27 @@ def make_scd2_merger(
         # pin once: the dirty census AND the pool both consume delta — on
         # the streaming path an unpinned batch source is read twice
         delta = delta.localCheckpoint(eager=True)
-        stored = None
-        try:
-            # sidecar-first, same contract as make_cdc_merger: the log's
-            # schema never shrinks, so no per-epoch mergeSchema footer sweep
-            schema_json = read_text_marker(spark, f"{log_path}/_schema")
-            if schema_json is not None:
-                stored = spark.read.schema(
-                    StructType.fromJson(json.loads(schema_json))
-                ).parquet(log_path)
-            else:
-                stored = spark.read.option("mergeSchema", "true").parquet(log_path)
-        except AnalysisException as exc:
-            cond = (
-                exc.getCondition()
-                if hasattr(exc, "getCondition")
-                else exc.getErrorClass()
-            )
-            if cond not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-                raise
-        dirty = [
+        dirty = {
             int(r[0]) for r in delta.select("__bucket").distinct().collect()
-        ]  # metadata-sized
+        }  # metadata-sized
+        stored = state_table.read(spark, log_path)  # None: the first batch
         if stored is None:
             pool = delta
         else:
-            pool = stored.filter(F.col("__bucket").isin(dirty)).unionByName(
+            pool = stored.filter(F.col("__bucket").isin(list(dirty))).unionByName(
                 delta, allowMissingColumns=True
             )
         # exact-duplicate drop = replay idempotence for the append-ish log.
         # The log write IS the pool's materialization (write-first, as in
         # make_cdc_merger): the SCD2 recompute reads the written dirty
         # buckets back instead of a localCheckpoint of the whole pool.
-        pool = pool.distinct()
-        pool_schema = pool.schema
-        pool.write.mode("overwrite").partitionBy("__bucket").parquet(log_path)
-        write_text_marker(spark, f"{log_path}/_schema", pool_schema.json())
-        log_back = (
-            spark.read.schema(pool_schema)
-            .parquet(log_path)
-            .filter(F.col("__bucket").isin(dirty))
+        state_table.write(pool.distinct(), log_path, dirty)
+        log_back = state_table.read(spark, log_path).filter(
+            F.col("__bucket").isin(list(dirty))
         )
-        hist = scd2_history(log_back, pk_cols)
-        # the emptied-bucket census rides the write (observed metric)
-        obs = Observation(f"scd2-present-{table}-{epoch_id}")
-        observed = hist.observe(obs, F.collect_set("__bucket").alias("buckets"))
-        hist_schema = hist.schema
-        observed.write.mode("overwrite").partitionBy("__bucket").parquet(scd2_path)
-        write_text_marker(spark, f"{scd2_path}/_schema", hist_schema.json())
         # a bucket whose keys were ALL deleted still has log rows (the
-        # deletes), but may emit no scd2 rows — sweep its stale partition
-        present = {int(b) for b in obs.get["buckets"]}
-        for bucket in sorted(set(dirty) - present):
-            fs, part, _ = _fs_path(spark, f"{scd2_path}/__bucket={bucket}")
-            if fs.exists(part):
-                fs.delete(part, True)
+        # deletes), but may emit no scd2 rows — the write sweeps it
+        state_table.write(scd2_history(log_back, pk_cols), scd2_path, dirty)
         write_marker(spark, marker, epoch_id)
 
     return merge
@@ -571,14 +430,7 @@ def make_scd2_merger(
 def read_scd2(spark, scd2_path: str) -> DataFrame:
     """The user-facing SCD2 table (bucket column dropped). Sidecar-first
     like ``read_table`` — no inference job."""
-    schema_json = read_text_marker(spark, f"{scd2_path}/_schema")
-    if schema_json is not None:
-        df = spark.read.schema(StructType.fromJson(json.loads(schema_json))).parquet(
-            scd2_path
-        )
-    else:
-        df = spark.read.option("mergeSchema", "true").parquet(scd2_path)
-    return df.drop("__bucket")
+    return _stored(spark, scd2_path).drop("__bucket")
 
 
 def scd2_stream(

@@ -22,28 +22,26 @@ side changes through CDC:
   |groups| rows); the fact table is never rescanned at read time.
 
 Cost per trigger: O(batch + dirty-bucket dim rows + dirty-bucket fact
-rows) — independent of total table sizes. The limitation is symmetric
-CDC: if the FACT side also streams, both sides need the merger (one per
-table, shared bucket function) and the view recomputes buckets dirty on
-EITHER side; this module implements the dim-stream/fact-static case and
-documents the extension.
+rows) — independent of total table sizes. If the FACT side also streams,
+both sides need the merger (one per table, shared bucket function) and the
+view recomputes buckets dirty on EITHER side:
+``make_symmetric_join_view_mergers``.
+
+The partial table and the merged row tables follow the bucketed layout
+contract of ``streaming/state_table.py`` (dirty-bucket overwrite, the
+``_schema`` sidecar, the emptied-bucket sweep, a key's bucket never
+changes).
 """
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
+from split_kinesis_streams_with_glue_spark.streaming import state_table
 from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
     make_cdc_merger,
-)
-from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    _fs as _fs_path,
-    read_text_marker,
-    write_text_marker,
+    read_rollup,
 )
 
 
@@ -101,21 +99,9 @@ def make_cdc_join_view_merger(
         partials = joined.groupBy(
             F.col("__dim_bucket").alias("__bucket"), *group_cols
         ).agg(F.count(F.lit(1)).alias("n"), F.sum(value_expr).alias("total"))
-        # the present-bucket census rides the write as an observed metric
-        # (<= num_buckets values) instead of re-running the join+aggregate
-        # for a separate collect (r14, as in make_cdc_merger)
-        obs = Observation(f"join-view-present-{table}")
-        partials_schema = partials.schema
-        observed = partials.observe(obs, F.collect_set("__bucket").alias("buckets"))
-        observed.write.mode("overwrite").partitionBy("__bucket").parquet(agg_path)
-        write_text_marker(spark, f"{agg_path}/_schema", partials_schema.json())
         # dirty buckets whose dim rows vanished (or join to nothing) leave
-        # no partial rows; drop their stale partitions
-        present = {int(b) for b in obs.get["buckets"]}
-        for bucket in sorted(set(dirty) - present):
-            fs, part, _ = _fs_path(spark, f"{agg_path}/__bucket={bucket}")
-            if fs.exists(part):
-                fs.delete(part, True)
+        # no partial rows; the write sweeps their stale partitions
+        state_table.write(partials, agg_path, dirty_ids)
 
     return make_cdc_merger(
         path, table, pk_cols, num_buckets,
@@ -126,18 +112,9 @@ def make_cdc_join_view_merger(
 def read_join_view(spark, agg_path: str, group_cols: list[str]) -> DataFrame:
     """The user-facing join aggregate: fold the per-bucket partials
     (bounded by num_buckets × |groups| — the fact table is never
-    rescanned). Sidecar-first like ``read_table`` — no inference job."""
-    schema_json = read_text_marker(spark, f"{agg_path}/_schema")
-    if schema_json is not None:
-        partials = spark.read.schema(
-            StructType.fromJson(json.loads(schema_json))
-        ).parquet(agg_path)
-    else:
-        partials = spark.read.parquet(agg_path)
-    return partials.groupBy(*group_cols).agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("total").alias("total"),
-    )
+    rescanned). The partial table has ``read_rollup``'s layout, so it folds
+    the same way."""
+    return read_rollup(spark, agg_path, group_cols)
 
 
 def make_symmetric_join_view_mergers(
@@ -173,20 +150,10 @@ def make_symmetric_join_view_mergers(
     Sequential availableNow drains (the tested mode) satisfy this; for
     two live processingTime streams, serialize the foreachBatch bodies
     (same driver lock or alternating triggers)."""
-    from pyspark.errors import AnalysisException
 
     def _side(spark, path, dirty):
-        try:
-            # sidecar-first (the row tables are merger-maintained, so the
-            # sidecar exists after any epoch): no inference footer sweep
-            schema_json = read_text_marker(spark, f"{path}/_schema")
-            if schema_json is not None:
-                df = spark.read.schema(
-                    StructType.fromJson(json.loads(schema_json))
-                ).parquet(path)
-            else:
-                df = spark.read.option("mergeSchema", "true").parquet(path)
-        except AnalysisException:
+        df = state_table.read(spark, path)
+        if df is None:
             return None  # that side has seen no epoch yet
         df = df.filter(F.col("__bucket").isin(dirty))
         if "operation" in df.columns:
@@ -198,37 +165,21 @@ def make_symmetric_join_view_mergers(
         left = _side(spark, left_path, dirty)
         right = _side(spark, right_path, dirty)
         if left is None or right is None:
-            empty_sweep = dirty
-            partials = None
-        else:
-            l = left.withColumnRenamed("__bucket", "__b").drop(
-                "timestamp", "operation"
-            )
-            r = right.drop("__bucket", "timestamp", "operation")
-            # qualified join condition: when left_key == right_key (the
-            # common case) an unaliased F.col(key) == F.col(key) is
-            # ambiguous and raises at merge time
-            joined = l.alias("l").join(
-                r.alias("r"), F.col(f"l.{left_key}") == F.col(f"r.{right_key}")
-            )
-            partials = joined.groupBy(
-                F.col("__b").alias("__bucket"), *group_cols
-            ).agg(F.count(F.lit(1)).alias("n"), F.sum(value_expr).alias("total"))
-            obs = Observation(f"sym-view-present-{left_table}-{right_table}")
-            partials_schema = partials.schema
-            observed = partials.observe(
-                obs, F.collect_set("__bucket").alias("buckets")
-            )
-            observed.write.mode("overwrite").partitionBy("__bucket").parquet(
-                agg_path
-            )
-            write_text_marker(spark, f"{agg_path}/_schema", partials_schema.json())
-            present = {int(b) for b in obs.get["buckets"]}
-            empty_sweep = sorted(set(dirty) - present)
-        for bucket in empty_sweep:
-            fs, part, _ = _fs_path(spark, f"{agg_path}/__bucket={bucket}")
-            if fs.exists(part):
-                fs.delete(part, True)
+            # the view is empty until both sides exist, and nothing ever
+            # wrote it while one side was absent: no partials to refresh
+            return
+        l = left.withColumnRenamed("__bucket", "__b").drop("timestamp", "operation")
+        r = right.drop("__bucket", "timestamp", "operation")
+        # qualified join condition: when left_key == right_key (the common
+        # case) an unaliased F.col(key) == F.col(key) is ambiguous and
+        # raises at merge time
+        joined = l.alias("l").join(
+            r.alias("r"), F.col(f"l.{left_key}") == F.col(f"r.{right_key}")
+        )
+        partials = joined.groupBy(F.col("__b").alias("__bucket"), *group_cols).agg(
+            F.count(F.lit(1)).alias("n"), F.sum(value_expr).alias("total")
+        )
+        state_table.write(partials, agg_path, dirty)
 
     def hook(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
         update_view(merged.sparkSession, dirty_ids)

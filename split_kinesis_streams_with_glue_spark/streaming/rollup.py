@@ -4,7 +4,8 @@ stream arrives.
 
 Per micro-batch: partial-aggregate the batch by (bucket, keys), merge with
 the stored aggregate rows OF THE TOUCHED BUCKETS ONLY, and rewrite exactly
-those bucket partitions (``partitionOverwriteMode=dynamic``). At scale the
+those bucket partitions — the bucketed state-table layout of
+``streaming/state_table.py``, partitioned on ``bucket``. At scale the
 cost per trigger is O(batch + dirty-bucket rows), independent of the total
 history size — the property that makes a rollup usable on an unbounded
 stream. Counts and sums merge associatively, so partial agg + merge is
@@ -24,10 +25,10 @@ batches.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from split_kinesis_streams_with_glue_spark.streaming import state_table
 from split_kinesis_streams_with_glue_spark.streaming.markers import (
     read_marker,
     write_marker,
@@ -51,12 +52,18 @@ def make_merger(
         last = read_marker(spark, epoch_marker)
         if last is not None and epoch_id <= last:
             return  # replayed epoch — already applied
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         delta = batch.groupBy(bucket.alias("bucket"), *keys).agg(
             F.count(F.lit(1)).alias("n"), F.sum(value_col).alias("total")
         )
-        try:
-            old = spark.read.parquet(path)
+        # None only when nothing was ever written at path: the first batch.
+        # Any other read failure (transient IO, corrupt file) fails the
+        # batch so the stream retries — a delta-only fallback would
+        # dynamic-overwrite touched buckets with the delta alone, silently
+        # discarding their accumulated history.
+        old = state_table.read(spark, path, "bucket")
+        if old is None:
+            merged = delta
+        else:
             # only the buckets this batch touches participate in the merge;
             # untouched partitions are left on disk as-is (dynamic overwrite)
             dirty = delta.select("bucket").distinct()
@@ -66,14 +73,8 @@ def make_merger(
                 .groupBy("bucket", *keys)
                 .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
             )
-        except AnalysisException:
-            # PATH_NOT_FOUND / UNABLE_TO_INFER_SCHEMA: genuinely the first
-            # batch. Anything else (transient IO, corrupt file) must FAIL
-            # the batch so the stream retries — falling back to delta-only
-            # here would dynamic-overwrite touched buckets with the delta
-            # alone, silently discarding their accumulated history.
-            merged = delta
-        merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        # counts only grow, so no touched bucket ever empties: nothing to sweep
+        state_table.write(merged, path, set(), "bucket")
         write_marker(spark, epoch_marker, epoch_id)
 
     return merge

@@ -1,0 +1,91 @@
+"""Bucketed state tables: the one on-disk layout every CDC merger keeps.
+
+A state table is Hive-partitioned Parquet under ``path``, partitioned by
+one column (``__bucket``, the key-hash bucket, for the CDC mergers and
+their derived tables; ``bucket``, the time bucket, for the continuous
+rollup). An epoch recomputes only its DIRTY partitions and rewrites
+exactly those — the per-batch deterministic recompute of D-Streams — so
+the cost per trigger is O(batch + dirty-partition rows), independent of
+the table's size. The contract:
+
+- **Dirty-partition overwrite.** ``write`` replaces the partitions present
+  in its output with the per-write ``partitionOverwriteMode=dynamic``
+  option; partitions it does not emit stay on disk untouched. The option
+  is per write, never a session conf: a session-wide ``dynamic`` would
+  turn every later full ``overwrite`` in the same session (a one-off
+  ``bucket_copy``, a publish) into a partial one.
+- **Emptied-partition sweep.** A dirty partition whose rows were all
+  deleted emits nothing, so dynamic overwrite would leave its stale
+  directory behind and the deleted rows would resurrect. ``write``
+  observes the partitions it emitted (an ``Observation`` that rides the
+  write — no extra job) and deletes ``dirty - present``.
+- **Schema sidecar.** ``write`` records the output schema in ``_schema``
+  (underscore-prefixed, so Spark's listing ignores it) BEFORE the data, so
+  every table it created has one and the sidecar covers every data file:
+  a merger's schema only grows, so it is what ``mergeSchema`` would infer,
+  and files written before a drift null-fill the newer columns. ``read``
+  takes that explicit schema instead of a per-read ``mergeSchema`` footer
+  sweep over every file, and it keeps a table whose rows were all deleted
+  readable as zero rows. ``read`` trusts the sidecar only if it parses to
+  a schema holding the partition column; otherwise (a torn or foreign
+  file, a table written before sidecars existed) it falls back to
+  ``mergeSchema``.
+- **The partition column is immutable per key.** An update that moved a
+  key to another partition would strand its old version in the old one,
+  which no epoch dirties again. Key-hash buckets of a primary or foreign
+  key, and event-time buckets of an append-only stream, satisfy this.
+"""
+
+from __future__ import annotations
+
+import json
+from collections.abc import Iterable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from split_kinesis_streams_with_glue_spark.streaming.markers import (
+    _fs,
+    read_text_marker,
+    write_text_marker,
+)
+
+
+def write(df: DataFrame, path: str, dirty: Iterable, col: str = "__bucket") -> set:
+    """Dynamic-overwrite the ``col`` partitions present in ``df``, record
+    the ``_schema`` sidecar, and delete the ``dirty`` partitions ``df`` no
+    longer emits. Returns the set of partition values written."""
+    spark = df.sparkSession
+    write_text_marker(spark, f"{path}/_schema", df.schema.json())
+    obs = Observation()
+    (
+        df.observe(obs, F.collect_set(col).alias("present"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(col)
+        .parquet(path)
+    )
+    present = set(obs.get["present"])
+    # the directory name is built unescaped: right for the integer bucket
+    # ids the sweep is used with, not for strings Hive would %-escape
+    for value in set(dirty) - present:
+        fs, part, _ = _fs(spark, f"{path}/{col}={value}")
+        fs.delete(part, True)
+    return present
+
+
+def read(spark: SparkSession, path: str, col: str = "__bucket") -> DataFrame | None:
+    """The state table at ``path``, or None if nothing was ever written
+    there (a filesystem check; no Spark read of an absent path)."""
+    fs, root, _ = _fs(spark, path)
+    if not fs.exists(root):
+        return None
+    sidecar = read_text_marker(spark, f"{path}/_schema")
+    try:
+        schema = StructType.fromJson(json.loads(sidecar)) if sidecar else None
+    except (ValueError, KeyError, TypeError):  # not a schema: torn or foreign
+        schema = None
+    if schema is None or col not in schema.fieldNames():
+        return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(schema).parquet(path)

@@ -7,8 +7,10 @@ foreachBatch), (3) a batch rewrites only the key-hash buckets it touches.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.envelope import generate_cdc_envelopes
@@ -599,3 +601,43 @@ def test_fingerprint_sweeps_tombstone_only_buckets_out_of_order(
         "tombstone-only bucket"
     )
     assert not os.path.isdir(os.path.join(fp, f"__bucket={target}"))
+
+
+# ------------------------------------------------- _schema sidecar validation
+
+
+def _truncated(sidecar: str) -> str:
+    return sidecar[: len(sidecar) // 2]
+
+
+def _without_bucket(sidecar: str) -> str:
+    schema = json.loads(sidecar)
+    schema["fields"] = [f for f in schema["fields"] if f["name"] != "__bucket"]
+    return json.dumps(schema)
+
+
+@pytest.mark.parametrize(
+    "corrupt", [_truncated, _without_bucket], ids=["truncated", "no_bucket_column"]
+)
+def test_invalid_schema_sidecar_falls_back_to_merge_schema(
+    spark, sf_dir, tmp_path, corrupt
+):
+    """A sidecar that is not a schema holding the partition column (a torn
+    write, a foreign file) is ignored: the read infers the schema from the
+    data files instead, and returns exactly the rows it returned before."""
+    from split_kinesis_streams_with_glue_spark.streaming.markers import (
+        read_text_marker,
+        write_text_marker,
+    )
+
+    _, phases = _phases(spark, sf_dir)
+    path = str(tmp_path / "tbl")
+    merge = make_cdc_merger(path, "customer", ["c_custkey"], num_buckets=8)
+    merge(phases[0], 0)
+    merge(phases[1], 1)
+    before = _sorted_rows(read_table(spark, path))
+    sidecar = f"{path}/_schema"
+    # through the Hadoop API, so the local filesystem's checksum file
+    # matches the corrupted content
+    write_text_marker(spark, sidecar, corrupt(read_text_marker(spark, sidecar)))
+    assert _sorted_rows(read_table(spark, path)) == before

@@ -371,3 +371,28 @@ def test_symmetric_join_view_shared_key_name(spark, sf_dir, tmp_path):
         for r in read_join_view(spark, agg, ["c_mktsegment"]).collect()
     }
     assert got == want
+
+
+def test_merger_epoch_leaves_session_overwrite_mode_alone(spark, tmp_path):
+    """Merger epochs overwrite their dirty buckets with a per-write option,
+    never by switching the session to dynamic partition overwrite: a later
+    full overwrite in the same session (``bucket_copy`` re-run over fewer
+    keys) must still replace every old bucket directory."""
+    from split_kinesis_streams_with_glue_spark.envelope import wrap
+    from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
+        make_cdc_merger,
+    )
+
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    mode_before = spark.conf.get(mode_key)
+    facts = str(tmp_path / "facts")
+    bucket_copy(spark.range(64).withColumnRenamed("id", "k"), "k", facts, 8)
+    rows = spark.createDataFrame(
+        [(i, 10.0) for i in range(20)], "c_custkey long, c_acctbal double"
+    )
+    merge = make_cdc_merger(str(tmp_path / "tbl"), "customer", ["c_custkey"], 8)
+    merge(wrap(rows, "customer", "load", seq=F.lit(0)), 0)
+    bucket_copy(spark.range(1).withColumnRenamed("id", "k"), "k", facts, 8)
+    buckets = [d for d in os.listdir(facts) if d.startswith("__bucket=")]
+    assert len(buckets) == 1, f"stale buckets survived the overwrite: {buckets}"
+    assert spark.conf.get(mode_key) == mode_before
