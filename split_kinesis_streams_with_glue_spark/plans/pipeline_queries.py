@@ -18,7 +18,11 @@ from split_kinesis_streams_with_glue_spark.operators.split import (
     split_one,
     split_stats,
 )
-from split_kinesis_streams_with_glue_spark.plans.registry import load, query
+from split_kinesis_streams_with_glue_spark.plans.registry import (
+    load,
+    query,
+    stage_cdc_phases,
+)
 from split_kinesis_streams_with_glue_spark.sources.memory import json_roundtrip
 
 
@@ -96,52 +100,22 @@ def cdc_merge_apply(spark, sf_dir):
     touched key-hash buckets are rewritten (dynamic partition overwrite),
     never the whole table. Must equal the one-shot full-history compaction
     (cdc_compact_customer's oracle) row for row."""
-    import os
     import tempfile
 
-    from split_kinesis_streams_with_glue_spark.envelope import to_json_lines
-    from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
-        infer_envelope_schema,
-    )
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         cdc_merge_stream,
         read_table,
     )
 
     base = tempfile.mkdtemp(prefix="sgs_merge_")
-    src = f"{base}/src"
-    os.makedirs(src)
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
-    phases = [
+    # one epoch per phase, in CDC order
+    stream = stage_cdc_phases(spark, f"{base}/src", [
         env.filter(op == "load"),
         env.filter(op == "update"),  # both update passes, one batch: ts tie-break
         env.filter(op == "delete"),
-    ]
-    stamped: set[str] = set()
-
-    def stamp(t: int) -> None:
-        # strictly increasing mtimes → the file source batches phases in
-        # CDC order (oldest-modified first)
-        for f in os.listdir(src):
-            p = os.path.join(src, f)
-            if p not in stamped:
-                os.utime(p, (t, t))
-                stamped.add(p)
-
-    for i, ph in enumerate(phases):
-        to_json_lines(ph).coalesce(1).write.mode("append").text(src)
-        stamp(1_600_000_000 + i)
-    stream = (
-        # sampled inference: single-table envelope — every data line carries
-        # the full customer payload, so a 5% line sample infers the same
-        # union schema as the full parse (pinned by
-        # test_streaming.test_sampled_inference_matches_full) at ~1/20 the
-        # JSON-parse cost of the inference pass
-        spark.readStream.schema(infer_envelope_schema(spark, src, sampling_ratio=0.05))
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
+    ])
     q = cdc_merge_stream(
         stream,
         f"{base}/tbl",
@@ -812,52 +786,23 @@ def cdc_merge_out_of_order(spark, sf_dir):
     late updates, so the final table must STILL equal the in-order
     result — the same oracle as cdc_merge_apply. Without tombstones the
     %35 keys (deleted AND updated) would resurrect."""
-    import os
     import tempfile
 
-    from split_kinesis_streams_with_glue_spark.envelope import to_json_lines
-    from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
-        infer_envelope_schema,
-    )
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         cdc_merge_stream,
         read_table,
     )
 
     base = tempfile.mkdtemp(prefix="sgs_merge_ooo_")
-    src = f"{base}/src"
-    os.makedirs(src)
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
-    phases = [
+    # one epoch per phase, in DELIVERY order (which here is NOT event-time
+    # order)
+    stream = stage_cdc_phases(spark, f"{base}/src", [
         env.filter(op == "load"),
         env.filter(op == "delete"),  # arrives before the updates it outranks
         env.filter(op == "update"),
-    ]
-    stamped: set[str] = set()
-
-    def stamp(t: int) -> None:
-        # strictly increasing mtimes → the file source batches phases in
-        # DELIVERY order (which here is NOT event-time order)
-        for f in os.listdir(src):
-            p = os.path.join(src, f)
-            if p not in stamped:
-                os.utime(p, (t, t))
-                stamped.add(p)
-
-    for i, ph in enumerate(phases):
-        to_json_lines(ph).coalesce(1).write.mode("append").text(src)
-        stamp(1_600_000_000 + i)
-    stream = (
-        # sampled inference: single-table envelope — every data line carries
-        # the full customer payload, so a 5% line sample infers the same
-        # union schema as the full parse (pinned by
-        # test_streaming.test_sampled_inference_matches_full) at ~1/20 the
-        # JSON-parse cost of the inference pass
-        spark.readStream.schema(infer_envelope_schema(spark, src, sampling_ratio=0.05))
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
+    ])
     q = cdc_merge_stream(
         stream,
         f"{base}/tbl",

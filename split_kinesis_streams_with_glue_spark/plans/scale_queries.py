@@ -41,7 +41,11 @@ from split_kinesis_streams_with_glue_spark.operators.sketches import (
     cms_build,
     cms_estimate,
 )
-from split_kinesis_streams_with_glue_spark.plans.registry import load, query
+from split_kinesis_streams_with_glue_spark.plans.registry import (
+    load,
+    query,
+    stage_cdc_phases,
+)
 
 
 @query(
@@ -560,50 +564,21 @@ def cdc_rollup_apply(spark, sf_dir):
     only dirty buckets are ever rewritten. The final view must equal
     aggregating the full-history compaction — which is exactly what the
     oracle computes from first principles."""
-    import os
-    import tempfile
-
-    from split_kinesis_streams_with_glue_spark.envelope import (
-        generate_cdc_envelopes,
-        to_json_lines,
-    )
-    from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
-        infer_envelope_schema,
-    )
+    from split_kinesis_streams_with_glue_spark.envelope import generate_cdc_envelopes
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         make_cdc_rollup_merger,
         read_rollup,
     )
+    from split_kinesis_streams_with_glue_spark.streaming.markers import start
 
     base = tempfile.mkdtemp(prefix="sgs_cdcroll_")
-    src = f"{base}/src"
-    os.makedirs(src)
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
-    phases = [
+    stream = stage_cdc_phases(spark, f"{base}/src", [
         env.filter(op == "load"),
         env.filter(op == "update"),
         env.filter(op == "delete"),
-    ]
-    stamped: set = set()
-
-    def stamp(t: int) -> None:
-        for f in os.listdir(src):
-            p = os.path.join(src, f)
-            if p not in stamped:
-                os.utime(p, (t, t))
-                stamped.add(p)
-
-    for i, ph in enumerate(phases):
-        to_json_lines(ph).coalesce(1).write.mode("append").text(src)
-        stamp(1_600_000_000 + i)
-    stream = (
-        # sampled inference: single-table envelope (see pipeline_queries;
-        # pinned by test_streaming.test_sampled_inference_matches_full)
-        spark.readStream.schema(infer_envelope_schema(spark, src, sampling_ratio=0.05))
-        .option("maxFilesPerTrigger", "1")
-        .json(src)
-    )
+    ])
     merge = make_cdc_rollup_merger(
         f"{base}/tbl",
         f"{base}/agg",
@@ -613,13 +588,7 @@ def cdc_rollup_apply(spark, sf_dir):
         F.col("c_acctbal").cast("decimal(18,2)"),
         num_buckets=16,
     )
-    q = (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    start(stream, merge, f"{base}/ckpt").awaitTermination()
     # surface cast per round-5 verdict #1 (the schema guard flagged this
     # sibling of cdc_join_view_apply): exact DECIMAL fold, integer-cents
     # < 2^53, so the double is bit-exact on both engines

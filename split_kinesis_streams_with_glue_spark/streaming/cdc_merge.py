@@ -34,12 +34,16 @@ Scale notes:
   until ``expire_tombstones`` rewrites (only) the buckets holding ones
   older than a chosen safety horizon — the usual watermark-style bound on
   how late a change may arrive.
-- Replay safety: foreachBatch is at-least-once, so the merger records the
-  last applied epoch in a ``_last_epoch`` marker (Hadoop FS, atomic
-  temp+rename — streaming/markers.py) and skips epochs already applied.
-  The merge itself is also idempotent (same input ⇒ same winners), so the
-  marker only saves wasted work on the non-crash path; the crash window
-  between data write and marker write re-merges one epoch harmlessly.
+- Replay safety: every merger here runs under the replay contract of
+  ``streaming/markers.py`` (``once``): the last applied epoch is recorded
+  in a ``_last_epoch`` marker that commits after the writes, and an epoch
+  at or below it is skipped. Re-merging the LATEST epoch is harmless (the
+  same input gives the same winners), which is why the crash window
+  between data write and marker write re-merges one epoch without harm.
+  What the guard prevents is a STALE epoch re-delivered after newer ones
+  re-merging its older rows: ordered mode keeps no tombstones, so a row a
+  later epoch deleted would come back (``test_epoch_replay_is_noop``
+  replays a stale epoch and pins the table unchanged).
 
 The on-disk layout — dirty-bucket dynamic overwrite, the ``_schema``
 sidecar, the emptied-bucket sweep, and the rule that a key's bucket
@@ -60,10 +64,7 @@ from split_kinesis_streams_with_glue_spark.operators.compact import (
 )
 from split_kinesis_streams_with_glue_spark.operators.split import split_one
 from split_kinesis_streams_with_glue_spark.streaming import state_table
-from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    read_marker,
-    write_marker,
-)
+from split_kinesis_streams_with_glue_spark.streaming.markers import once, start
 
 META_COLS = ("timestamp", "operation", "__bucket")
 
@@ -100,13 +101,9 @@ def make_cdc_merger(
     FAILS the batch on anything else, BEFORE any file is written (the
     stream retries; a human widens the policy or fixes the producer).
     ``None`` keeps the mechanical tolerance (mergeSchema + null-fill)."""
-    marker = f"{path}/_last_epoch"
 
-    def merge(env_batch: DataFrame, epoch_id: int) -> None:
+    def merge(env_batch: DataFrame, epoch_id: int, last) -> None:
         spark = env_batch.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return  # replayed epoch — already applied
         # prune=False: batch-local all-null column pruning would make the
         # stored schema depend on which batch wrote first
         rows = event_time(
@@ -183,9 +180,8 @@ def make_cdc_merger(
                 F.col("__bucket").isin(list(dirty_ids))
             )
             on_merged(back, dirty_ids, surviving)
-        write_marker(spark, marker, epoch_id)
 
-    return merge
+    return once(f"{path}/_last_epoch", merge)
 
 
 def cdc_merge_stream(
@@ -200,12 +196,7 @@ def cdc_merge_stream(
     """Maintain the latest-row-per-key table for ``table`` under ``path``
     from an envelope stream; returns the started StreamingQuery."""
     merge = make_cdc_merger(path, table, pk_cols, num_buckets, out_of_order=out_of_order)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, merge, checkpoint)
 
 
 def _stored(spark, path: str) -> DataFrame:
@@ -385,13 +376,9 @@ def make_scd2_merger(
     buckets' logs alone — validity is a per-key computation and a key
     lives in exactly one bucket, so clean buckets' derived rows stay
     exactly valid. O(batch + dirty-bucket log rows) per trigger."""
-    marker = f"{log_path}/_last_epoch"
 
-    def merge(env_batch: DataFrame, epoch_id: int) -> None:
+    def merge(env_batch: DataFrame, epoch_id: int, last) -> None:
         spark = env_batch.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return
         delta = event_time(
             split_one(env_batch, table, keep_operation=True, prune=False)
         ).withColumn(
@@ -422,9 +409,8 @@ def make_scd2_merger(
         # a bucket whose keys were ALL deleted still has log rows (the
         # deletes), but may emit no scd2 rows — the write sweeps it
         state_table.write(scd2_history(log_back, pk_cols), scd2_path, dirty)
-        write_marker(spark, marker, epoch_id)
 
-    return merge
+    return once(f"{log_path}/_last_epoch", merge)
 
 
 def read_scd2(spark, scd2_path: str) -> DataFrame:
@@ -446,9 +432,4 @@ def scd2_stream(
     (availableNow drain; same foreachBatch replay contract as
     cdc_merge_stream). Returns the started StreamingQuery."""
     merge = make_scd2_merger(log_path, scd2_path, table, pk_cols, num_buckets)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, merge, checkpoint)

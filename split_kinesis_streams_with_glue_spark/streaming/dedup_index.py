@@ -32,17 +32,17 @@ accumulated pair set equals the one-shot batch LSH's pair set regardless
 of how documents were split into batches. ``read_dup_flags`` derives the
 min-id-survivor verdict (doc_id, dup_of) from the pair table.
 
-Replay safety: at-least-once ``foreachBatch`` delivery is handled the
-same way the CDC merger handles it — a ``_last_epoch`` marker commits
-after the appends; a crash between append and marker re-appends one
-epoch's rows, which ``read_dup_flags``'s min-aggregate and the distinct
+Replay safety: at-least-once ``foreachBatch`` delivery is handled by the
+replay contract of ``streaming/markers.py`` (``once``), as for the CDC
+merger — a ``_last_epoch`` marker skips committed epochs and commits after
+the appends; a crash between append and marker re-appends one epoch's
+rows, which ``read_dup_flags``'s min-aggregate and the distinct
 candidate set make harmless for the flags (band/shingle duplicates cost
 space until compaction, not correctness).
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,24 +51,14 @@ from split_kinesis_streams_with_glue_spark.operators.dedup import (
     minhash_signatures,
     shingle_sets,
 )
-from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    read_marker,
-    write_marker,
-)
+from split_kinesis_streams_with_glue_spark.streaming.markers import _fs, once, start
 
 
 def _read_or_none(spark, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as exc:
-        cond = (
-            exc.getCondition()
-            if hasattr(exc, "getCondition")
-            else exc.getErrorClass()
-        )
-        if cond in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
-            return None
-        raise
+    """The index table at ``path``, or None before its first append (a
+    filesystem check; no Spark read of an absent path)."""
+    fs, p, _ = _fs(spark, path)
+    return spark.read.parquet(path) if fs.exists(p) else None
 
 
 def make_dedup_indexer(
@@ -82,15 +72,9 @@ def make_dedup_indexer(
 ):
     """Build the idempotent ``(doc_batch, epoch_id) -> None`` ingest
     function (exposed for direct replay testing, like the CDC merger's)."""
-    marker = f"{index_path}/_last_epoch"
 
-    def ingest(batch: DataFrame, epoch_id: int) -> None:
+    def ingest(batch: DataFrame, epoch_id: int, last) -> None:
         spark = batch.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return  # replayed epoch — already applied
-        if not batch.take(1):
-            return
         # batch-side blocking state; the shingle frame feeds signatures AND
         # verification, so materialize it once (same rationale as
         # minhash_near_dups)
@@ -99,6 +83,11 @@ def make_dedup_indexer(
             .withColumn("sh", F.xxhash64("shingle"))
             .localCheckpoint(eager=True)
         )
+        # no shingles (an empty batch, or only null or too-short texts):
+        # write nothing, since a partitioned append of zero rows would
+        # leave the index directories with no data file to read back
+        if not sh.take(1):
+            return
         sigs = minhash_signatures(sh, num_hashes).localCheckpoint(eager=True)
         # banding inline (lsh_candidate_pairs pairs within ONE frame; here
         # the two sides differ, so band the batch and probe the store)
@@ -189,7 +178,7 @@ def make_dedup_indexer(
             pool.withColumnRenamed("sh", "shingle"), threshold, candidates=cands
         )
 
-        # ---- appends, then the epoch marker commits the batch
+        # ---- appends; ``once`` commits the epoch marker after them
         verified.write.mode("append").parquet(f"{index_path}/pairs")
         batch_bands.withColumn(
             "__shard", F.pmod(F.col("bucket"), F.lit(n_shards))
@@ -199,9 +188,8 @@ def make_dedup_indexer(
         ).write.partitionBy("__shard").mode("append").parquet(
             f"{index_path}/shingles"
         )
-        write_marker(spark, marker, epoch_id)
 
-    return ingest
+    return once(f"{index_path}/_last_epoch", ingest)
 
 
 def dedup_index_stream(
@@ -214,12 +202,7 @@ def dedup_index_stream(
     """Maintain the near-dup index from a document stream; returns the
     started StreamingQuery."""
     ingest = make_dedup_indexer(index_path, threshold, **kwargs)
-    return (
-        stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, ingest, checkpoint)
 
 
 def read_dup_pairs(spark, index_path: str) -> DataFrame:

@@ -43,6 +43,7 @@ from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
     make_cdc_merger,
     read_rollup,
 )
+from split_kinesis_streams_with_glue_spark.streaming.markers import start
 
 
 def bucket_copy(df: DataFrame, key_col: str, path: str, num_buckets: int) -> None:
@@ -216,9 +217,4 @@ def join_view_stream(
         path, agg_path, fact_path, table, pk_cols,
         dim_key, fact_key, group_cols, value_expr, num_buckets,
     )
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, merge, checkpoint)

@@ -9,9 +9,15 @@ the trigger that introduced it, not at the next snapshot audit.
 
 State shape: the reference's bin counts are computed ONCE and broadcast
 (bounded: n_bins + 2 rows); each trigger bins only its own batch and
-appends one (epoch, psi, drifted) row to the metrics side-channel with the
-same epoch-marker replay guard the other mergers use. O(batch) per
-trigger, metrics table grows one row per trigger.
+appends one (epoch, psi, drifted) row to the metrics side-channel. O(batch)
+per trigger, metrics table grows one row per trigger.
+
+Replay: every monitor runs under the replay contract of
+``streaming/markers.py`` (``once``): a ``_last_epoch`` marker under the
+metrics path skips committed epochs and commits after the epoch's writes.
+The stateful monitors (novelty, EWMA) keep their state in versioned slots
+(``slot(state_path, epoch)``), so a crash anywhere inside an epoch replays
+against the unchanged committed state.
 """
 
 from __future__ import annotations
@@ -19,10 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    read_marker,
-    write_marker,
-)
+from split_kinesis_streams_with_glue_spark.streaming.markers import once, slot
 
 
 def make_psi_monitor(
@@ -55,13 +58,8 @@ def make_psi_monitor(
     )  # bounded: n_bins + 2 rows
     ref_counts = {int(r["bin"]): int(r["n_ref"]) for r in ref_rows}
     ref_total = sum(ref_counts.values())
-    marker = f"{metrics_path}/_last_epoch"
 
-    def monitor(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return
+    def monitor(batch_df: DataFrame, epoch_id: int, last) -> None:
         cur_rows = (
             batch_df.filter(F.col(col).isNotNull())
             .select(binexpr(col).alias("bin"))
@@ -79,12 +77,11 @@ def make_psi_monitor(
             q = max(cur_counts.get(b, 0) / cur_total, eps) if cur_total else eps
             psi += (p - q) * math.log(p / q)
         row = [(int(epoch_id), round(psi, 6), psi > threshold, cur_total)]
-        spark.createDataFrame(
+        batch_df.sparkSession.createDataFrame(
             row, "epoch int, psi double, drifted boolean, n_rows bigint"
         ).write.mode("append").parquet(metrics_path)
-        write_marker(spark, marker, epoch_id)
 
-    return monitor
+    return once(f"{metrics_path}/_last_epoch", monitor)
 
 
 def read_psi_metrics(spark, metrics_path: str) -> DataFrame:
@@ -114,7 +111,7 @@ def make_novelty_monitor(
     cardinality, as with any Bloom deployment).
 
     Replay contract (the round-4 verdict's crash-window fix): the Bloom
-    state is STAGED to a versioned slot ``{state_path}/__v={epoch}`` and
+    state is STAGED to the versioned slot ``slot(state_path, epoch)`` and
     the epoch marker commits LAST, so the committed state — what the next
     epoch (or a replay) reads — never changes until the whole epoch is
     durable. A crash anywhere inside the epoch leaves the previous
@@ -124,29 +121,19 @@ def make_novelty_monitor(
     metrics row is likewise idempotent: one ``epoch=N`` partition,
     overwritten (not appended) on replay, so a crash after the metrics
     write duplicates nothing. Superseded state versions are GC'd after
-    the marker commit."""
+    the marker commit (``once(..., slots=state_path)``)."""
     from split_kinesis_streams_with_glue_spark.operators.sketches import (
         bloom_build,
         bloom_might_contain,
     )
-    from split_kinesis_streams_with_glue_spark.streaming.markers import (
-        _fs as _fs_path,
-    )
 
-    marker = f"{metrics_path}/_last_epoch"
-
-    def monitor(batch_df: DataFrame, epoch_id: int) -> None:
+    def monitor(batch_df: DataFrame, epoch_id: int, last) -> None:
         spark = batch_df.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return
         keys = batch_df.select(F.col(key_col).alias("__k")).distinct()
         # read the last COMMITTED state version — present iff a marker is
         # (the marker commits after the version is written, never before)
         stored = (
-            spark.read.parquet(f"{state_path}/__v={int(last)}").localCheckpoint(
-                eager=True
-            )
+            spark.read.parquet(slot(state_path, last)).localCheckpoint(eager=True)
             if last is not None
             else None
         )
@@ -179,23 +166,14 @@ def make_novelty_monitor(
                 ).alias("bloom"),
                 F.count(F.lit(1)).alias("n_words"),
             )
-        # stage: the committed version (__v=last) is never touched, so any
-        # crash from here on replays against unchanged state
-        merged.write.mode("overwrite").parquet(f"{state_path}/__v={int(epoch_id)}")
+        # stage: the committed slot is never touched, so any crash from here
+        # on replays against unchanged state
+        merged.write.mode("overwrite").parquet(slot(state_path, epoch_id))
         spark.createDataFrame(
             [(int(n_new), int(n_batch))], "n_new bigint, n_batch_keys bigint"
         ).write.mode("overwrite").parquet(f"{metrics_path}/epoch={int(epoch_id)}")
-        write_marker(spark, marker, epoch_id)  # commit point
-        # GC superseded versions (idempotent; a crash here only leaves a
-        # kilobyte-sized orphan that the next epoch's sweep removes)
-        fs, root, _ = _fs_path(spark, state_path)
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if name.startswith("__v=") and name != f"__v={int(epoch_id)}":
-                    fs.delete(st.getPath(), True)
 
-    return monitor
+    return once(f"{metrics_path}/_last_epoch", monitor, slots=state_path)
 
 
 def make_ewma_monitor(
@@ -220,24 +198,16 @@ def make_ewma_monitor(
 
     State is one (ewma, n_epochs) row, committed with the same
     versioned-slot / marker-last protocol as ``make_novelty_monitor``:
-    stage to ``{state_path}/__v={epoch}``, overwrite the idempotent
+    stage to ``slot(state_path, epoch)``, overwrite the idempotent
     ``{metrics_path}/epoch={epoch}`` partition, THEN write the marker —
     a crash anywhere replays against the previous committed state and
     reproduces the identical row."""
-    from split_kinesis_streams_with_glue_spark.streaming.markers import (
-        _fs as _fs_path,
-    )
 
-    marker = f"{metrics_path}/_last_epoch"
-
-    def monitor(batch_df: DataFrame, epoch_id: int) -> None:
+    def monitor(batch_df: DataFrame, epoch_id: int, last) -> None:
         spark = batch_df.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return
         prev = None
         if last is not None:
-            prev = spark.read.parquet(f"{state_path}/__v={int(last)}").collect()[0]
+            prev = spark.read.parquet(slot(state_path, last)).collect()[0]
         stats = batch_df.agg(
             F.sum(F.col(value_col).cast(f"decimal(27,{decimal_scale})"))
             .cast("double")
@@ -265,21 +235,14 @@ def make_ewma_monitor(
                 alarm = threshold is not None and deviation > threshold
         spark.createDataFrame(
             [(ewma, int(epoch_id) + 1)], "ewma double, n_epochs int"
-        ).write.mode("overwrite").parquet(f"{state_path}/__v={int(epoch_id)}")
+        ).write.mode("overwrite").parquet(slot(state_path, epoch_id))
         spark.createDataFrame(
             [(batch_mean, ewma, deviation, bool(alarm), n)],
             "batch_mean double, ewma double, deviation double, "
             "alarm boolean, n_rows bigint",
         ).write.mode("overwrite").parquet(f"{metrics_path}/epoch={int(epoch_id)}")
-        write_marker(spark, marker, epoch_id)  # commit point
-        fs, root, _ = _fs_path(spark, state_path)
-        if fs.exists(root):
-            for st in fs.listStatus(root):
-                name = st.getPath().getName()
-                if name.startswith("__v=") and name != f"__v={int(epoch_id)}":
-                    fs.delete(st.getPath(), True)
 
-    return monitor
+    return once(f"{metrics_path}/_last_epoch", monitor, slots=state_path)
 
 
 def make_quality_monitor(keep_expr, metrics_path: str):
@@ -296,25 +259,19 @@ def make_quality_monitor(keep_expr, metrics_path: str):
     (overwritten, never appended) plus the marker-last commit; a crash
     anywhere replays to the identical row. ``keep_expr`` is any boolean
     Column, evaluated batch-side in one aggregation pass."""
-    marker = f"{metrics_path}/_last_epoch"
 
-    def monitor(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return
+    def monitor(batch_df: DataFrame, epoch_id: int, last) -> None:
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(keep_expr.cast("int")).alias("k"),
         ).collect()[0]
         n, k = int(row["n"]), int(row["k"] or 0)
         rate = round(k / n, 6) if n else None
-        spark.createDataFrame(
+        batch_df.sparkSession.createDataFrame(
             [(n, k, rate)], "n_rows bigint, n_keep bigint, keep_rate double"
         ).write.mode("overwrite").parquet(f"{metrics_path}/epoch={int(epoch_id)}")
-        write_marker(spark, marker, epoch_id)
 
-    return monitor
+    return once(f"{metrics_path}/_last_epoch", monitor)
 
 
 def make_opsmix_monitor(
@@ -333,13 +290,8 @@ def make_opsmix_monitor(
     the idempotent overwritten ``epoch=N`` partition, marker-last commit;
     a crash anywhere replays to the identical row. ``op_col`` is any
     string Column (e.g. ``F.col('metadata.operation')``)."""
-    marker = f"{metrics_path}/_last_epoch"
 
-    def monitor(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        last = read_marker(spark, marker)
-        if last is not None and epoch_id <= last:
-            return
+    def monitor(batch_df: DataFrame, epoch_id: int, last) -> None:
         op = op_col
         row = batch_df.agg(
             F.count(F.lit(1)).alias("n"),
@@ -352,7 +304,7 @@ def make_opsmix_monitor(
         nd = int(row["nd"] or 0)
         frac = round(nd / n, 6) if n else None
         alarm = bool(n and nd / n > delete_alarm_frac)
-        spark.createDataFrame(
+        batch_df.sparkSession.createDataFrame(
             [
                 (
                     n,
@@ -367,6 +319,5 @@ def make_opsmix_monitor(
             "n_rows bigint, n_load bigint, n_insert bigint, n_update bigint, "
             "n_delete bigint, delete_frac double, alarm boolean",
         ).write.mode("overwrite").parquet(f"{metrics_path}/epoch={int(epoch_id)}")
-        write_marker(spark, marker, epoch_id)
 
-    return monitor
+    return once(f"{metrics_path}/_last_epoch", monitor)

@@ -13,10 +13,11 @@ exact regardless of how rows split across micro-batches.
 
 Replay safety: foreachBatch is at-least-once — after a failure the same
 epoch is re-delivered, and naively re-merging it would double-count. The
-merger records the last applied epoch in ``_last_epoch`` under the output
-path (underscore-prefixed, so readers ignore it) and skips epochs it has
-already applied. The marker write follows the data write, so a crash
-between the two re-merges at most the one epoch whose write already
+merger runs under the replay contract of ``streaming/markers.py``
+(``once``): the last applied epoch is recorded in ``_last_epoch`` under the
+output path (underscore-prefixed, so readers ignore it), epochs already
+applied are skipped, and the marker commits after the data write, so a
+crash between the two re-merges at most the one epoch whose write already
 succeeded — the standard best-effort contract of a non-transactional sink.
 The (path, checkpoint) pair must be kept together: a fresh checkpoint over
 an existing output restarts epoch numbering and the guard would skip real
@@ -29,10 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.streaming import state_table
-from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    read_marker,
-    write_marker,
-)
+from split_kinesis_streams_with_glue_spark.streaming.markers import once, start
 
 
 def make_merger(
@@ -45,13 +43,9 @@ def make_merger(
     ``continuous_rollup`` (exposed for direct testing of replay behavior)."""
     bucket = bucket_expr if bucket_expr is not None else F.to_date("ts")
     keys = keys or ["event_type"]
-    epoch_marker = f"{path}/_last_epoch"
 
-    def merge(batch: DataFrame, epoch_id: int) -> None:
+    def merge(batch: DataFrame, epoch_id: int, last) -> None:
         spark = batch.sparkSession
-        last = read_marker(spark, epoch_marker)
-        if last is not None and epoch_id <= last:
-            return  # replayed epoch — already applied
         delta = batch.groupBy(bucket.alias("bucket"), *keys).agg(
             F.count(F.lit(1)).alias("n"), F.sum(value_col).alias("total")
         )
@@ -75,9 +69,8 @@ def make_merger(
             )
         # counts only grow, so no touched bucket ever empties: nothing to sweep
         state_table.write(merged, path, set(), "bucket")
-        write_marker(spark, epoch_marker, epoch_id)
 
-    return merge
+    return once(f"{path}/_last_epoch", merge)
 
 
 def continuous_rollup(
@@ -90,10 +83,4 @@ def continuous_rollup(
 ):
     """Maintain (bucket, *keys) -> (n, total) under ``path``; returns the
     started StreamingQuery. ``bucket_expr`` defaults to the event date."""
-    merge = make_merger(path, bucket_expr, keys, value_col)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, make_merger(path, bucket_expr, keys, value_col), checkpoint)

@@ -12,15 +12,16 @@ Design (SURVEY.md §3.2 engine equivalents):
   Streaming supports.
 - **Idempotence**: foreachBatch is at-least-once — after a crash the same
   batch id is re-delivered, and manual appends carry none of the built-in
-  file sink's commit-log protection. Each output directory therefore keeps
-  a ``_last_batch`` marker (``streaming.markers``, Hadoop-FS-backed so it
-  works on HDFS/S3A too) written after its append; a replayed batch skips
-  every output whose marker already covers it. The remaining exposure is a
-  crash between ONE output's append and its marker write — that single
-  table can duplicate one batch on replay. Closing that last window needs
-  an ACID table format (Iceberg/Delta) or batch-keyed subdirectories;
-  append-only parquet cannot do better (verified by the restart and replay
-  tests).
+  file sink's commit-log protection. Each output directory (every table,
+  the DLQ, the metrics) is therefore appended through its own
+  ``_last_batch`` marker under the replay contract of
+  ``streaming/markers.py`` (``once``: skip committed batches, commit the
+  marker last); a replayed batch skips every output whose marker already
+  covers it. The remaining exposure is a crash between ONE output's append
+  and its marker write — that single table can duplicate one batch on
+  replay. Closing that last window needs an ACID table format
+  (Iceberg/Delta) or batch-keyed subdirectories; append-only parquet
+  cannot do better (verified by the restart and replay tests).
 - **Triggers**: ``availableNow`` drains the backlog then stops (test mode);
   ``processingTime`` mirrors Firehose's 600 s buffering (reference
   README.md:78-81).
@@ -47,10 +48,7 @@ from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
     corrupt_records,
     read_envelope_stream,
 )
-from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    read_marker,
-    write_marker,
-)
+from split_kinesis_streams_with_glue_spark.streaming.markers import once
 
 
 def make_batch_processor(
@@ -66,68 +64,71 @@ def make_batch_processor(
     ``start_split_stream`` — exposed so replay idempotence is directly
     testable without driving a full stream restart."""
 
+    def append_table(t: str):
+        table_dir = f"{out_dir}/{schema_name}/{t}"
+
+        def step(batch_df: DataFrame, batch_id: int, last) -> None:
+            split = split_one(
+                batch_df,
+                t,
+                schema_name,
+                # date layout needs the event timestamp
+                keep_timestamp=keep_timestamp or partition_by_ingest_date,
+                prune=False,  # streaming: schema fixed by contract,
+                # not re-derived per batch (prune scans the batch)
+            )
+            writer = split.write.mode("append")
+            if partition_by_ingest_date:
+                # the Firehose !{timestamp:yyyy-MM-dd} prefix layout
+                # (reference README.md:76) as Hive partitioning —
+                # enables partition pruning on date-ranged queries
+                split = split.withColumn(
+                    "ingest_date", F.to_date(F.to_timestamp("timestamp"))
+                )
+                if not keep_timestamp:
+                    split = split.drop("timestamp")
+                writer = split.write.mode("append").partitionBy("ingest_date")
+            writer.parquet(table_dir)
+
+        return once(f"{table_dir}/_last_batch", step)
+
+    def append_dlq(batch_df: DataFrame, batch_id: int, last) -> None:
+        corrupt_records(batch_df).withColumn(
+            "batch_id", F.lit(batch_id)
+        ).write.mode("append").json(dlq_dir)
+
+    def append_metrics(batch_df: DataFrame, batch_id: int, last) -> None:
+        # live DMS-console view (image/image3.png): per-batch
+        # (schema, table, operation) counts plus a corrupt-row
+        # count — one tiny aggregate over the already-persisted
+        # batch, appended with the same replay guard as the data
+        m = split_stats(batch_df).unionByName(
+            corrupt_records(batch_df)
+            .agg(F.count(F.lit(1)).alias("n_records"))
+            .select(
+                F.lit(schema_name).alias("schema_name"),
+                F.lit("_corrupt").alias("table_name"),
+                F.lit("error").alias("operation"),
+                "n_records",
+            )
+        )
+        m.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.mode(
+            "append"
+        ).parquet(metrics_dir)
+
+    # one guarded output per table, then the DLQ and the metrics: a
+    # replayed batch skips every output whose marker already covers it
+    outputs = [append_table(t) for t in tables]
+    if dlq_dir is not None:
+        outputs.append(once(f"{dlq_dir}/_last_batch", append_dlq))
+    if metrics_dir is not None:
+        outputs.append(once(f"{metrics_dir}/_last_batch", append_metrics))
+
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         batch_df = batch_df.persist()
         try:
-            for t in tables:
-                table_dir = f"{out_dir}/{schema_name}/{t}"
-                marker = f"{table_dir}/_last_batch"
-                last = read_marker(spark, marker)
-                if last is not None and batch_id <= last:
-                    continue  # replayed batch: this output already has it
-                split = split_one(
-                    batch_df,
-                    t,
-                    schema_name,
-                    # date layout needs the event timestamp
-                    keep_timestamp=keep_timestamp or partition_by_ingest_date,
-                    prune=False,  # streaming: schema fixed by contract,
-                    # not re-derived per batch (prune scans the batch)
-                )
-                writer = split.write.mode("append")
-                if partition_by_ingest_date:
-                    # the Firehose !{timestamp:yyyy-MM-dd} prefix layout
-                    # (reference README.md:76) as Hive partitioning —
-                    # enables partition pruning on date-ranged queries
-                    split = split.withColumn(
-                        "ingest_date", F.to_date(F.to_timestamp("timestamp"))
-                    )
-                    if not keep_timestamp:
-                        split = split.drop("timestamp")
-                    writer = split.write.mode("append").partitionBy("ingest_date")
-                writer.parquet(table_dir)
-                write_marker(spark, marker, batch_id)
-            if dlq_dir is not None:
-                marker = f"{dlq_dir}/_last_batch"
-                last = read_marker(spark, marker)
-                if last is None or batch_id > last:
-                    corrupt_records(batch_df).withColumn(
-                        "batch_id", F.lit(batch_id)
-                    ).write.mode("append").json(dlq_dir)
-                    write_marker(spark, marker, batch_id)
-            if metrics_dir is not None:
-                # live DMS-console view (image/image3.png): per-batch
-                # (schema, table, operation) counts plus a corrupt-row
-                # count — one tiny aggregate over the already-persisted
-                # batch, appended with the same replay guard as the data
-                marker = f"{metrics_dir}/_last_batch"
-                last = read_marker(spark, marker)
-                if last is None or batch_id > last:
-                    m = split_stats(batch_df).unionByName(
-                        corrupt_records(batch_df)
-                        .agg(F.count(F.lit(1)).alias("n_records"))
-                        .select(
-                            F.lit(schema_name).alias("schema_name"),
-                            F.lit("_corrupt").alias("table_name"),
-                            F.lit("error").alias("operation"),
-                            "n_records",
-                        )
-                    )
-                    m.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-                        "append"
-                    ).parquet(metrics_dir)
-                    write_marker(spark, marker, batch_id)
+            for output in outputs:
+                output(batch_df, batch_id)
         finally:
             batch_df.unpersist()
 

@@ -9,10 +9,10 @@ the classic guarantees: estimates never undercount, every key whose true
 count exceeds N/capacity is present, and est - true <= the admission
 threshold recorded alongside.
 
-Batch-merge form (foreachBatch; epoch-snapshot replay contract — see
-``make_topk_merger``): per trigger the batch's exact per-key counts fold
-into the stored summary —
-keys already present add their counts; new keys are admitted at the current
+Batch-merge form (foreachBatch; the versioned-slot replay contract of
+``streaming/markers.py`` — see ``make_topk_merger``): per trigger the
+batch's exact per-key counts fold into the stored summary — keys already
+present add their counts; new keys are admitted at the current
 threshold (the count mass they could have accumulated while evicted, which
 is exactly their ``err``); the summary is cut back to the top ``capacity``
 rows and the threshold advances to the minimum surviving count once full.
@@ -26,9 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.streaming.markers import (
-    _fs as _fs_path,
+    once,
     read_marker,
-    write_marker,
+    slot,
+    start,
 )
 
 
@@ -41,26 +42,22 @@ def make_topk_merger(path: str, key_col: str, capacity: int = 256):
     epoch is harmless; this merge is INCREMENTAL (counts add), so writing
     into one summary location would double-count an epoch replayed after a
     crash between data write and marker write. Each epoch therefore writes
-    its own ``summary_e{N}`` snapshot derived from ``summary_e{last}`` —
-    re-running epoch N reproduces summary_e{N} byte-identically from the
-    untouched N-1 snapshot. The admission threshold is DERIVED from the
-    stored summary (min count once at capacity — monotone non-decreasing),
-    not kept as separate mutable state that could desync. The previous-but-
-    one snapshot is deleted after the marker commits, so disk holds at most
-    two capacity-row summaries."""
-    epoch_marker = f"{path}/_last_epoch"
+    its own versioned slot ``slot(path, N)`` derived from ``slot(path,
+    last)`` (``once(..., slots=path)``) — re-running epoch N reproduces its
+    slot byte-identically from the untouched committed one. The admission
+    threshold is DERIVED from the stored summary (min count once at
+    capacity — monotone non-decreasing), not kept as separate mutable
+    state that could desync. Every other slot is deleted after the marker
+    commits, so disk holds at most two capacity-row summaries."""
 
-    def merge(batch: DataFrame, epoch_id: int) -> None:
+    def merge(batch: DataFrame, epoch_id: int, last) -> None:
         spark = batch.sparkSession
-        last = read_marker(spark, epoch_marker)
-        if last is not None and epoch_id <= last:
-            return  # replayed epoch — already applied
         delta = batch.groupBy(F.col(key_col).alias("key")).agg(
             F.count(F.lit(1)).alias("__d_cnt")
         )
         stored_rows = []
         if last is not None:
-            stored = spark.read.parquet(f"{path}/summary_e{last}")
+            stored = spark.read.parquet(slot(path, last))
             stored_rows = stored.collect()  # bounded: <= capacity rows
         thresh = (
             min(r["cnt"] for r in stored_rows)
@@ -87,18 +84,11 @@ def make_topk_merger(path: str, key_col: str, capacity: int = 256):
         # top-`capacity` by count (ties by key for determinism); capacity is
         # small, so this is a TakeOrdered, not a global sort
         kept = pool.orderBy(F.col("cnt").desc(), F.col("key")).limit(capacity)
-        kept.coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/summary_e{epoch_id}"
-        )
-        write_marker(spark, epoch_marker, epoch_id)
-        if last is not None and last != epoch_id:
-            fs, prev, _ = _fs_path(spark, f"{path}/summary_e{last}")
-            # safe AFTER the marker: readers resolve via the marker, and a
-            # replay of epoch_id no longer needs the N-1 snapshot
-            if last < epoch_id and fs.exists(prev):
-                fs.delete(prev, True)
+        kept.coalesce(1).write.mode("overwrite").parquet(slot(path, epoch_id))
 
-    return merge
+    # the slot GC runs AFTER the marker: readers resolve via the marker, and
+    # a replay of the committed epoch no longer needs the previous slot
+    return once(f"{path}/_last_epoch", merge, slots=path)
 
 
 def stream_topk(
@@ -110,13 +100,7 @@ def stream_topk(
 ):
     """Maintain the summary from a streaming frame; returns the started
     StreamingQuery."""
-    merge = make_topk_merger(path, key_col, capacity)
-    return (
-        stream.writeStream.foreachBatch(merge)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start(stream, make_topk_merger(path, key_col, capacity), checkpoint)
 
 
 def read_topk(spark, path: str, k: int | None = None) -> DataFrame:
@@ -126,7 +110,7 @@ def read_topk(spark, path: str, k: int | None = None) -> DataFrame:
     last = read_marker(spark, f"{path}/_last_epoch")
     if last is None:
         raise FileNotFoundError(f"no top-k summary committed under {path}")
-    df = spark.read.parquet(f"{path}/summary_e{last}").orderBy(
+    df = spark.read.parquet(slot(path, last)).orderBy(
         F.col("cnt").desc(), F.col("key")
     )
     return df.limit(k) if k is not None else df

@@ -64,6 +64,30 @@ def test_replayed_epoch_is_a_no_op(spark, tmp_path):
     assert read_dup_pairs(spark, path).count() == n1 == 1
 
 
+def test_epoch_without_shingles_leaves_the_index_readable(spark, tmp_path):
+    """An epoch whose documents are all shorter than ``shingle_n`` words
+    (or have null text) yields no shingles; it must not leave ``bands/``
+    or ``shingles/`` as directories without data files, or every later
+    epoch fails to read them back."""
+    short = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "gamma"), (3, None)],
+        "doc_id long, text string",
+    )
+    docs = spark.createDataFrame(
+        [
+            (4, "alpha beta gamma delta epsilon zeta eta theta"),
+            (5, "alpha beta gamma delta epsilon zeta eta iota"),
+        ],
+        "doc_id long, text string",
+    )
+    path = str(tmp_path / "idx")
+    ingest = make_dedup_indexer(path, threshold=0.5)
+    ingest(short, epoch_id=1)
+    ingest(docs, epoch_id=2)
+    got = {(r["d1"], r["d2"]) for r in read_dup_pairs(spark, path).collect()}
+    assert got == {(4, 5)}
+
+
 def test_dedup_index_stream_file_source(spark, tmp_path):
     """End-to-end through the real streaming path: two parquet drops with
     ordered mtimes, maxFilesPerTrigger=1 → two epochs, flags identical to

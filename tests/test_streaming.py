@@ -148,6 +148,82 @@ def test_batch_replay_is_idempotent(spark, sf_dir, tmp_path):
     assert spark.read.parquet(f"{out}/dms_sample/nation").count() == 2 * n1
 
 
+def test_marker_lost_between_delete_and_rename_still_guards(spark, sf_dir, tmp_path):
+    """A marker write that crashed after deleting the old marker but before
+    renaming its (complete) temp file into place leaves no marker, only
+    ``<marker>.tmp`` holding the new id. The read must take that id, so a
+    replay of the batch appends nothing to any output."""
+    from split_kinesis_streams_with_glue_spark.envelope import generate_cdc_envelopes
+    from split_kinesis_streams_with_glue_spark.sources.memory import json_roundtrip
+    from split_kinesis_streams_with_glue_spark.streaming.markers import (
+        _fs,
+        read_marker,
+    )
+    from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
+        make_batch_processor,
+    )
+
+    batch = json_roundtrip(
+        generate_cdc_envelopes(spark, sf_dir, "nation", "n_nationkey", "n_regionkey")
+    )
+    out, dlq = str(tmp_path / "out"), str(tmp_path / "dlq")
+    process = make_batch_processor(out, ["nation"], dlq_dir=dlq, keep_timestamp=False)
+    process(batch, 0)
+    process(batch, 1)
+    n_rows = spark.read.parquet(f"{out}/dms_sample/nation").count()
+    n_dlq = spark.read.json(dlq).count()
+    for marker in (f"{out}/dms_sample/nation/_last_batch", f"{dlq}/_last_batch"):
+        # the crash state: the old marker deleted, the temp file not renamed
+        fs, p, jvm = _fs(spark, marker)
+        assert fs.rename(p, jvm.org.apache.hadoop.fs.Path(marker + ".tmp"))
+        assert not fs.exists(p)
+        assert read_marker(spark, marker) == 1
+    process(batch, 1)  # the replay after the crash
+    assert spark.read.parquet(f"{out}/dms_sample/nation").count() == n_rows
+    assert spark.read.json(dlq).count() == n_dlq
+
+
+def test_once_skips_committed_epochs_and_commits_last(spark, tmp_path):
+    """``markers.once``: a replayed or stale epoch never reaches the step;
+    a step that raises commits nothing, so the retry sees the same
+    committed id; with ``slots`` only the committed slot survives."""
+    import os
+
+    from split_kinesis_streams_with_glue_spark.streaming.markers import (
+        once,
+        read_marker,
+        slot,
+    )
+
+    marker, root = str(tmp_path / "_last_epoch"), str(tmp_path / "state")
+    calls, fail = [], {"epoch": None}
+
+    def step(df, epoch_id, last):
+        calls.append((epoch_id, last))
+        df.write.mode("overwrite").parquet(slot(root, epoch_id))
+        if epoch_id == fail["epoch"]:
+            raise RuntimeError("injected step failure")
+
+    run = once(marker, step, slots=root)
+    df = spark.range(1)
+    run(df, 0)
+    run(df, 1)
+    run(df, 1)  # replay
+    run(df, 0)  # stale
+    assert calls == [(0, None), (1, 0)]
+    assert read_marker(spark, marker) == 1
+
+    fail["epoch"] = 2
+    with pytest.raises(RuntimeError):
+        run(df, 2)
+    assert read_marker(spark, marker) == 1, "a failed step must commit nothing"
+    fail["epoch"] = None
+    run(df, 2)  # the retry derives from the same committed epoch
+    assert calls[-2:] == [(2, 1), (2, 1)]
+    assert read_marker(spark, marker) == 2
+    assert sorted(d for d in os.listdir(root) if d.startswith("__v=")) == ["__v=2"]
+
+
 def test_stream_dedup_with_watermark(spark, sf_dir, tmp_path):
     """Watermarked dropDuplicates on a real stream: duplicated keys across
     micro-batches within the horizon collapse to one."""
@@ -412,6 +488,7 @@ def test_topk_crash_between_snapshot_and_marker_recovers_exactly(
     written but its marker never committed. The re-delivered epoch must
     rebuild the snapshot from epoch 0's (still present) state — counts
     exact, no double-add."""
+    from split_kinesis_streams_with_glue_spark.streaming.markers import slot
     from split_kinesis_streams_with_glue_spark.streaming.topk import (
         make_topk_merger,
         read_topk,
@@ -424,7 +501,7 @@ def test_topk_crash_between_snapshot_and_marker_recovers_exactly(
     # a torn epoch-1 snapshot from the "crashed" attempt (wrong contents)
     spark.createDataFrame(
         [("a", 999, 0)], "key string, cnt long, err long"
-    ).write.mode("overwrite").parquet(f"{path}/summary_e1")
+    ).write.mode("overwrite").parquet(slot(path, 1))
     merge(b1, 1)  # redelivery: must overwrite the torn snapshot, not trust it
     got = {r["key"]: r["cnt"] for r in read_topk(spark, path).collect()}
     assert got == {"a": 5, "b": 1, "c": 4}
@@ -464,6 +541,7 @@ def test_novelty_monitor_counts_replays_and_partial_failure(
     overwrite made the replay see the merged filter and record n_new=0)."""
     from pyspark.sql import functions as F
 
+    import split_kinesis_streams_with_glue_spark.streaming.markers as markers
     import split_kinesis_streams_with_glue_spark.streaming.monitor as mon
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -478,18 +556,19 @@ def test_novelty_monitor_counts_replays_and_partial_failure(
     monitor(cust.filter(k < 800), 0)  # replay: no-op
 
     # epoch 1 crashes between the state stage and the marker commit
-    real_write_marker = mon.write_marker
+    real_write_marker = markers.write_marker
 
     def crash_before_marker(spark_, marker_path, epoch_id):
         raise RuntimeError("injected crash before marker commit")
 
-    monkeypatch.setattr(mon, "write_marker", crash_before_marker)
+    # the commit call ``markers.once`` makes after the epoch's writes
+    monkeypatch.setattr(markers, "write_marker", crash_before_marker)
     batch1 = cust.filter((k >= 400) & (k < 1200))
     try:
         monitor(batch1, 1)
     except RuntimeError:
         pass
-    monkeypatch.setattr(mon, "write_marker", real_write_marker)
+    monkeypatch.setattr(markers, "write_marker", real_write_marker)
 
     # redelivery: must count against the COMMITTED epoch-0 state
     monitor(batch1, 1)
@@ -522,6 +601,7 @@ def test_ewma_monitor_empty_batch_and_partial_failure(
     novelty monitor); replays are no-ops."""
     from pyspark.sql import functions as F
 
+    import split_kinesis_streams_with_glue_spark.streaming.markers as markers
     import split_kinesis_streams_with_glue_spark.streaming.monitor as mon
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -537,16 +617,16 @@ def test_ewma_monitor_empty_batch_and_partial_failure(
     monitor(b0, 0)  # replay: no-op
     monitor(b1, 1)
 
-    real = mon.write_marker
+    real = markers.write_marker
     monkeypatch.setattr(
-        mon, "write_marker",
+        markers, "write_marker",
         lambda *a: (_ for _ in ()).throw(RuntimeError("injected crash")),
     )
     try:
         monitor(b2, 2)
     except RuntimeError:
         pass
-    monkeypatch.setattr(mon, "write_marker", real)
+    monkeypatch.setattr(markers, "write_marker", real)
     monitor(b2, 2)  # redelivery after the partial failure
 
     rows = {r["epoch"]: r for r in mon.read_psi_metrics(spark, metrics).collect()}
