@@ -8,7 +8,13 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from split_kinesis_streams_with_glue_spark.plans.registry import load, query
+from split_kinesis_streams_with_glue_spark.plans.registry import (
+    drain_parquet,
+    load,
+    query,
+    stage_phases,
+    workspace,
+)
 from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
     hopping_event_counts,
     windowed_event_counts,
@@ -160,9 +166,6 @@ def events_sessionize_stateful(spark, sf_dir):
     as a 3-micro-batch time-ordered stream with a final flush sentinel —
     and verified against the SAME SQL oracle as the batch sessionization:
     streaming and batch must agree row-for-row."""
-    import os
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.stateful import (
         FLUSH_EVENT,
         sessionize_stream,
@@ -171,9 +174,7 @@ def events_sessionize_stateful(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="sgs_sess_")
-    src = f"{base}/src"
-    os.makedirs(src)
+    base = workspace("sess")
     # three time-ordered chunks → three micro-batches with real state
     # carry-over (sessions spanning batch boundaries)
     # ts reads as TIMESTAMP_NTZ from parquet (no UTC adjustment), which has
@@ -189,20 +190,6 @@ def events_sessionize_stateful(spark, sf_dir):
         ),
         ev.filter(F.unix_timestamp("ts").cast("double") > b2),
     ]
-    stamped: set[str] = set()
-
-    def stamp(t: int) -> None:
-        # force strictly increasing mtimes so the file source replays
-        # chunks in time order (it batches oldest-modified first)
-        for f in os.listdir(src):
-            p = os.path.join(src, f)
-            if p not in stamped:
-                os.utime(p, (t, t))
-                stamped.add(p)
-
-    for i, ch in enumerate(chunks):
-        ch.coalesce(1).write.mode("append").json(src)
-        stamp(1_600_000_000 + i)
     flush = ev.groupBy("user_id").agg(
         (F.max(F.unix_timestamp("ts")) + F.lit(90 * 24 * 3600)).alias("fes")
     ).select(
@@ -212,25 +199,16 @@ def events_sessionize_stateful(spark, sf_dir):
         F.lit(FLUSH_EVENT).alias("event_type"),
         F.lit(0.0).alias("value"),
     )
-    flush.coalesce(1).write.mode("append").json(src)
-    stamp(1_600_000_003)
+    # one epoch per frame, in time order, the flush last
+    stage_phases(f"{base}/src", [*chunks, flush])
     stream = (
         spark.readStream.schema(
             "event_id long, ts timestamp, user_id long, event_type string, value double"
         )
         .option("maxFilesPerTrigger", "1")
-        .json(src)
+        .json(f"{base}/src")
     )
-    q = (
-        sessionize_stream(stream, gap_seconds=900)
-        .writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{base}/out")
+    return drain_parquet(sessionize_stream(stream, gap_seconds=900), base)
 
 
 @query(
@@ -244,8 +222,6 @@ def events_stream_dedup(spark, sf_dir):
     """Streaming exact dedup with watermark-bounded state
     (dropDuplicatesWithinWatermark): the events table doubled, streamed,
     deduped back to exactly the original rows."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.stateful import (
         dedup_stream_within_watermark,
     )
@@ -253,7 +229,7 @@ def events_stream_dedup(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
-    base = tempfile.mkdtemp(prefix="sgs_sdedup_")
+    base = workspace("sdedup")
     ev.unionAll(ev).coalesce(2).write.mode("overwrite").json(f"{base}/src")
     stream = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string, value double"
@@ -261,15 +237,7 @@ def events_stream_dedup(spark, sf_dir):
     deduped = dedup_stream_within_watermark(stream, ["event_id"]).select(
         "event_id", "user_id", "event_type", F.round("value", 6).alias("value")
     )
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{base}/out")
+    return drain_parquet(deduped, base)
 
 
 @query(
@@ -367,8 +335,6 @@ def events_stream_stream_join(spark, sf_dir):
     the join state, so it runs on unbounded streams; replayed here through
     the file source with availableNow, checked against the batch range-join
     oracle."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.stateful import (
         stream_interval_join,
     )
@@ -376,7 +342,7 @@ def events_stream_stream_join(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="sgs_ssj_")
+    base = workspace("ssj")
     ev.filter(F.col("event_type") == "purchase").coalesce(2).write.mode(
         "overwrite"
     ).json(f"{base}/purchases")
@@ -400,15 +366,7 @@ def events_stream_stream_join(spark, sf_dir):
         "view_event_id",
         (F.unix_timestamp("ts") - F.unix_timestamp("r_ts")).alias("lag_sec"),
     )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{base}/out")
+    return drain_parquet(joined, base)
 
 
 @query(
@@ -462,14 +420,12 @@ def events_continuous_rollup(spark, sf_dir):
     merging into a date-partitioned rollup where only the touched date
     partitions are rewritten (dynamic partition overwrite). The end state
     must equal the one-shot batch GROUP BY."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.rollup import (
         continuous_rollup,
     )
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type", "value")
-    base = tempfile.mkdtemp(prefix="sgs_rollup_")
+    base = workspace("rollup")
     ev.repartition(8).write.mode("overwrite").json(f"{base}/src")
     stream = (
         spark.readStream.schema(
@@ -544,13 +500,11 @@ def events_stream_enrich(spark, sf_dir):
     state needed (the static side is re-broadcast each batch, so it can
     even be swapped under the stream); the dimension filter and join stay
     fully inside codegen."""
-    import tempfile
-
     ev = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    base = tempfile.mkdtemp(prefix="sgs_enrich_")
+    base = workspace("enrich")
     ev.coalesce(2).write.mode("overwrite").json(f"{base}/src")
     stream = spark.readStream.schema(
         "event_id long, user_id long, event_type string, value double"
@@ -560,15 +514,7 @@ def events_stream_enrich(spark, sf_dir):
         .join(F.broadcast(cust), F.col("user_id") == F.col("c_custkey"))
         .select("event_id", "user_id", "c_mktsegment", F.round("value", 6).alias("value"))
     )
-    q = (
-        enriched.writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(f"{base}/out")
+    return drain_parquet(enriched, base)
 
 
 @query(
@@ -720,9 +666,6 @@ def events_stream_stream_left_join(spark, sf_dir):
     final micro-batch advances the watermark so every pending outer row
     flushes before the drain ends (then the sentinel is filtered out);
     result must equal the batch LEFT JOIN exactly."""
-    import os
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.stateful import (
         stream_interval_join,
     )
@@ -730,7 +673,7 @@ def events_stream_stream_left_join(spark, sf_dir):
     ev = load(spark, sf_dir, "events").select(
         "event_id", "ts", "user_id", "event_type"
     )
-    base = tempfile.mkdtemp(prefix="sgs_sslj_")
+    base = workspace("sslj")
     sentinel = ev.agg(
         F.max(F.unix_timestamp("ts")).alias("m")
     ).select(
@@ -739,26 +682,9 @@ def events_stream_stream_left_join(spark, sf_dir):
         F.lit(-1).cast("long").alias("user_id"),
         F.lit("sentinel").alias("event_type"),
     )
-    stamped: set[str] = set()
-
-    def write_side(name: str, flt):
-        side = f"{base}/{name}"
-        ev.filter(flt).coalesce(1).write.mode("append").json(side)
-        for f in os.listdir(side):
-            p = os.path.join(side, f)
-            if p not in stamped:
-                os.utime(p, (1_600_000_000, 1_600_000_000))
-                stamped.add(p)
-        sentinel.coalesce(1).write.mode("append").json(side)
-        for f in os.listdir(side):
-            p = os.path.join(side, f)
-            if p not in stamped:
-                os.utime(p, (1_600_000_100, 1_600_000_100))
-                stamped.add(p)
-        return side
-
-    pdir = write_side("purchases", F.col("event_type") == "purchase")
-    vdir = write_side("views", F.col("event_type") == "view")
+    pdir, vdir = f"{base}/purchases", f"{base}/views"
+    stage_phases(pdir, [ev.filter(F.col("event_type") == "purchase"), sentinel])
+    stage_phases(vdir, [ev.filter(F.col("event_type") == "view"), sentinel])
     schema = "event_id long, ts timestamp, user_id long, event_type string"
     p = (
         spark.readStream.schema(schema)
@@ -784,17 +710,9 @@ def events_stream_stream_left_join(spark, sf_dir):
         "view_event_id",
         (F.unix_timestamp("ts") - F.unix_timestamp("r_ts")).alias("lag_sec"),
     )
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", f"{base}/out")
-        .option("checkpointLocation", f"{base}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # drop the sentinel purchase row (its null-extended self) and any
     # sentinel-vs-sentinel pairing
-    return spark.read.parquet(f"{base}/out").filter(F.col("event_id") != -1)
+    return drain_parquet(joined, base).filter(F.col("event_id") != -1)
 
 
 @query(

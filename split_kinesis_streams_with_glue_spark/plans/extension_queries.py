@@ -43,7 +43,7 @@ from split_kinesis_streams_with_glue_spark.operators.text import (
     token_counts,
 )
 from split_kinesis_streams_with_glue_spark.functions.textfns import fingerprint
-from split_kinesis_streams_with_glue_spark.plans.registry import load, query
+from split_kinesis_streams_with_glue_spark.plans.registry import load, query, workspace
 
 # exact SQL ground truth for 3-word-shingle Jaccard pairs (DuckDB 1.0 has no
 # lateral column args to generate_series, hence the bounded join).
@@ -163,15 +163,13 @@ def dedup_incremental_index(spark, sf_dir):
     candidates only. The accumulated min-id flags must equal what the
     one-shot quadratic Jaccard (the oracle) flags over the whole corpus —
     arrival order and batch boundaries must not matter."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.dedup_index import (
         make_dedup_indexer,
         read_dup_flags,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    path = tempfile.mkdtemp(prefix="sgs_dedup_idx_") + "/idx"
+    path = workspace("dedup_idx") + "/idx"
     ingest = make_dedup_indexer(path, threshold=0.5)
     for epoch, i in enumerate((1, 0, 2), start=1):
         ingest(docs.filter(F.col("doc_id") % 3 == i), epoch_id=epoch)

@@ -22,6 +22,7 @@ from split_kinesis_streams_with_glue_spark.plans.registry import (
     load,
     query,
     stage_cdc_phases,
+    workspace,
 )
 from split_kinesis_streams_with_glue_spark.sources.memory import json_roundtrip
 
@@ -100,14 +101,12 @@ def cdc_merge_apply(spark, sf_dir):
     touched key-hash buckets are rewritten (dynamic partition overwrite),
     never the whole table. Must equal the one-shot full-history compaction
     (cdc_compact_customer's oracle) row for row."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         cdc_merge_stream,
         read_table,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_merge_")
+    base = workspace("merge")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     # one epoch per phase, in CDC order
@@ -163,8 +162,6 @@ def stream_split_customer(spark, sf_dir):
     corrupt lines) → Structured Streaming file source → foreachBatch fan-out
     → parquet sink → read back. availableNow trigger drains the backlog;
     corrupt lines go to the DLQ, not the table."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.envelope import (
         control_records,
         to_json_lines,
@@ -176,7 +173,7 @@ def stream_split_customer(spark, sf_dir):
         run_split_stream_to_completion,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_stream_")
+    base = workspace("stream")
     src = f"{base}/src"
     lines = to_json_lines(wrap(load(spark, sf_dir, "customer"), "customer"))
     lines = lines.unionByName(to_json_lines(control_records(spark, ["customer"])))
@@ -284,11 +281,9 @@ def catalog_sql_over_split(spark, sf_dir):
     """S7 end-to-end: split output written to parquet, registered in the
     catalog, queried BY NAME with spark.sql — the Athena workflow
     (image/image7.png) as engine code."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.sources.catalog import register_parquet
 
-    base = tempfile.mkdtemp(prefix="sgs_cat_")
+    base = workspace("cat")
     env = wrap(load(spark, sf_dir, "customer"), "customer")
     split_one(env, "customer", keep_timestamp=False, prune=False).write.mode("overwrite").parquet(
         f"{base}/customer"
@@ -315,9 +310,7 @@ def schema_drift_merge(spark, sf_dir):
     (the source table gained a field mid-stream). mergeSchema unions the
     parquet footers; early rows surface NULL for the new column — the
     crawler-re-inference behavior as one declarative read."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="sgs_drift_")
+    base = workspace("drift")
     cust = load(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
     v1 = cust.filter(F.col("c_custkey") % 2 == 0)
     v2 = cust.filter(F.col("c_custkey") % 2 == 1).withColumn(
@@ -473,9 +466,7 @@ def formats_csv_roundtrip(spark, sf_dir):
     table written as headered CSV and read back with an explicit schema is
     byte-identical. CSV is the interchange format; schema comes from the
     catalog, never re-inferred per read."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="sgs_csv_")
+    base = workspace("csv")
     c = load(spark, sf_dir, "customer")
     c.write.mode("overwrite").option("header", True).csv(base)
     return spark.read.schema(c.schema).option("header", True).csv(base)
@@ -494,9 +485,7 @@ def formats_orc_roundtrip(spark, sf_dir):
     read back — the columnar alternative the reference's crawler claims to
     handle; Spark's vectorized ORC reader gives the same pushdown/pruning
     economics as parquet."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="sgs_orc_")
+    base = workspace("orc")
     o = load(spark, sf_dir, "orders")
     o.write.mode("overwrite").orc(base)
     return spark.read.orc(base)
@@ -516,7 +505,6 @@ def catalog_analyze_stats(spark, sf_dir):
     catalog's Statistics entry — proving the stats the static planner
     sizes joins with are collected and correct."""
     import re
-    import tempfile
 
     from split_kinesis_streams_with_glue_spark.sources.catalog import (
         analyze_table,
@@ -525,7 +513,7 @@ def catalog_analyze_stats(spark, sf_dir):
 
     # external table at a fresh location: robust to stale warehouse dirs
     # from earlier sessions (a managed CREATE fails on a leftover path)
-    path = tempfile.mkdtemp(prefix="sgs_stats_") + "/nation"
+    path = workspace("stats") + "/nation"
     spark.read.parquet(f"{sf_dir}/nation.parquet").write.parquet(path)
     spark.sql("DROP TABLE IF EXISTS q_stats_nation")
     register_parquet(spark, "q_stats_nation", path, temp=False)
@@ -649,8 +637,6 @@ def pipeline_publish_gated(spark, sf_dir):
     query's read_published) must see exactly the audited snapshot. A
     deliberately corrupted second publish (duplicated keys) is blocked and
     must leave readers on the good version."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.operators.publish import (
         PublishBlocked,
         read_published,
@@ -661,7 +647,7 @@ def pipeline_publish_gated(spark, sf_dir):
         uniqueness,
     )
 
-    path = tempfile.mkdtemp(prefix="sgs_pub_") + "/customer"
+    path = workspace("pub") + "/customer"
     cust = load(spark, sf_dir, "customer")
     checks = [completeness("c_custkey"), uniqueness("c_custkey")]
     write_audit_publish(cust, path, checks)
@@ -786,14 +772,12 @@ def cdc_merge_out_of_order(spark, sf_dir):
     late updates, so the final table must STILL equal the in-order
     result — the same oracle as cdc_merge_apply. Without tombstones the
     %35 keys (deleted AND updated) would resurrect."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         cdc_merge_stream,
         read_table,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_merge_ooo_")
+    base = workspace("merge_ooo")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     # one epoch per phase, in DELIVERY order (which here is NOT event-time
@@ -910,14 +894,12 @@ def cdc_merge_verified(spark, sf_dir):
     BIT-EXACTLY equal what the oracle recomputes from scratch over the
     final CDC state — proving the incremental maintenance path equals the
     full recomputation any replica would run."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         make_fingerprinted_merger,
         read_fingerprint,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_merge_fp_")
+    base = workspace("merge_fp")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     merge = make_fingerprinted_merger(
@@ -961,8 +943,6 @@ def pipeline_publish_group_atomic(spark, sf_dir):
     join read through the group marker must still see v1's consistent
     pair. If per-table semantics leaked through, the +1000 balances would
     shift avg_acctbal; if staged files leaked, order counts would double."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.operators.publish import (
         PublishBlocked,
         read_published_group,
@@ -972,7 +952,7 @@ def pipeline_publish_group_atomic(spark, sf_dir):
         uniqueness,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_pub_grp_") + "/snap"
+    base = workspace("pub_grp") + "/snap"
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders")
     v = write_audit_publish_group(
@@ -1041,15 +1021,13 @@ def cdc_join_view_apply(spark, sf_dir):
     folded view must equal recomputing the join aggregate over the final
     customer state from scratch (the oracle): updates shift the summed
     balances, deletes retract every joined contribution of their keys."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.join_view import (
         bucket_copy,
         make_cdc_join_view_merger,
         read_join_view,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_join_view_")
+    base = workspace("join_view")
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -1114,14 +1092,12 @@ def cdc_join_view_symmetric(spark, sf_dir):
     materialized tables' dirty-bucket rows. The folded view must equal
     the join of the two FINAL states — deletes on either side retract,
     updates on either side re-price."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.join_view import (
         make_symmetric_join_view_mergers,
         read_join_view,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_join_sym_")
+    base = workspace("join_sym")
     cenv = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     oenv = generate_cdc_envelopes(spark, sf_dir, "orders", "o_orderkey", "o_totalprice")
     op = F.col("metadata.operation")
@@ -1290,15 +1266,13 @@ def cdc_scd2_incremental(spark, sf_dir):
     key's validity chain lives in one bucket) — never re-windowing the
     full log. Must equal the one-shot scd2_history over the whole stream
     (cdc_scd2_customer's oracle)."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.envelope import BASE_TS
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         make_scd2_merger,
         read_scd2,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_scd2_inc_")
+    base = workspace("scd2_inc")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     merge = make_scd2_merger(
@@ -1338,8 +1312,6 @@ def pipeline_cdc_optimize(spark, sf_dir):
     while leaving the readable rows EXACTLY the final CDC state — the
     same oracle as cdc_merge_apply, now read through the compacted
     files."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.operators.maintenance import (
         compact_small_files,
     )
@@ -1348,7 +1320,7 @@ def pipeline_cdc_optimize(spark, sf_dir):
         read_table,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_cdc_opt_")
+    base = workspace("cdc_opt")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     merge = make_cdc_merger(f"{base}/tbl", "customer", ["c_custkey"], num_buckets=4)
@@ -1419,14 +1391,12 @@ def stream_psi_monitor(spark, sf_dir):
     the delete-phase subset stays near-reference. One metrics row per
     epoch with the replay guard; the oracle recomputes each batch's PSI
     bin for bin."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.monitor import (
         make_psi_monitor,
         read_psi_metrics,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_psi_mon_")
+    base = workspace("psi_mon")
     cust = load(spark, sf_dir, "customer")
     monitor = make_psi_monitor(
         cust, "c_acctbal", -1000.0, 10000.0, f"{base}/metrics"
@@ -1473,14 +1443,12 @@ def stream_novelty_monitor(spark, sf_dir):
     genuinely-new keys (no false negatives; the 32 KB filter's fp rate is
     < 1e-9 per key at fixture cardinality, so the counts are exact).
     Replayed triggers are no-ops (exercised in-query)."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.monitor import (
         make_novelty_monitor,
         read_psi_metrics,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_novelty_")
+    base = workspace("novelty")
     cust = load(spark, sf_dir, "customer")
     monitor = make_novelty_monitor(
         "c_custkey", f"{base}/metrics", f"{base}/state"
@@ -1543,14 +1511,12 @@ def stream_ewma_monitor(spark, sf_dir):
     operation on both engines; the oracle recomputes the three-epoch
     recursion in closed form. Replayed triggers are no-ops (exercised
     in-query); state commits versioned-slot / marker-last."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.monitor import (
         make_ewma_monitor,
         read_psi_metrics,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_ewma_")
+    base = workspace("ewma")
     cust = load(spark, sf_dir, "customer")
     monitor = make_ewma_monitor(
         "c_acctbal", f"{base}/metrics", f"{base}/state",
@@ -1613,8 +1579,6 @@ def stream_quality_monitor(spark, sf_dir):
     change. Completes the ingest-monitor family: PSI = values, novelty =
     identities, EWMA = level, this = fitness-for-purpose. Replayed
     triggers are no-ops (exercised in-query)."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.functions.textfns import (
         whitespace_tokens,
     )
@@ -1623,7 +1587,7 @@ def stream_quality_monitor(spark, sf_dir):
         read_psi_metrics,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_qmon_")
+    base = workspace("qmon")
     docs = load(spark, sf_dir, "documents")
     keep = F.size(whitespace_tokens(F.lower(F.col("text")))) >= 30
     monitor = make_quality_monitor(keep, f"{base}/metrics")
@@ -1675,14 +1639,12 @@ def stream_opsmix_monitor(spark, sf_dir):
     load/update/delete phases drive three epochs: the pure-delete epoch
     must alarm, the others must not; replayed triggers are no-ops
     (exercised in-query). Fifth member of the ingest-monitor family."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.monitor import (
         make_opsmix_monitor,
         read_psi_metrics,
     )
 
-    base = tempfile.mkdtemp(prefix="sgs_opsmix_")
+    base = workspace("opsmix")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     monitor = make_opsmix_monitor(op, f"{base}/metrics", delete_alarm_frac=0.5)

@@ -37,7 +37,10 @@ Determinism rules used throughout:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
@@ -107,20 +110,58 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return df
 
 
-def stage_cdc_phases(
-    spark: SparkSession, src: str, phases: list[DataFrame]
-) -> DataFrame:
-    """Write each CDC envelope frame of ``phases`` under the new directory
-    ``src`` as one JSON-lines file, and open a one-file-per-trigger stream
-    over them: strictly increasing mtimes make the file source deliver the
-    phases in list order (oldest-modified first), one epoch each."""
+_ROOT: str | None = None
+
+
+def workspace(name: str) -> str:
+    """A fresh directory for one builder call's inputs, checkpoints and
+    outputs, so a builder called twice never shares a checkpoint. Every
+    directory lives under one ``sgs_`` root per process, made on first use
+    under ``tempfile.gettempdir()`` and removed when the process exits
+    normally — not sooner, because a returned DataFrame reads its files
+    lazily until then. A killed process leaves its root behind."""
+    global _ROOT
+    if _ROOT is None:
+        _ROOT = tempfile.mkdtemp(prefix="sgs_")
+        atexit.register(shutil.rmtree, _ROOT, True)
+    return tempfile.mkdtemp(prefix=f"{name}_", dir=_ROOT)
+
+
+def drain_parquet(stream: DataFrame, base: str) -> DataFrame:
+    """Run ``stream`` over its whole backlog (availableNow) into a parquet
+    sink at ``{base}/out``, checkpointed at ``{base}/ckpt``, and read the
+    output back."""
+    (
+        stream.writeStream.format("parquet")
+        .option("path", f"{base}/out")
+        .option("checkpointLocation", f"{base}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.read.parquet(f"{base}/out")
+
+
+def stage_phases(src: str, frames: list[DataFrame]) -> None:
+    """Write each frame of ``frames`` under the new directory ``src`` as
+    one JSON-lines file with strictly increasing mtimes, so a
+    ``maxFilesPerTrigger=1`` file source delivers the frames in list order
+    (oldest-modified first), one epoch each."""
     os.makedirs(src)
-    for i, ph in enumerate(phases):
+    for i, frame in enumerate(frames):
         before = set(os.listdir(src))
-        to_json_lines(ph).coalesce(1).write.mode("append").text(src)
+        to_json_lines(frame).coalesce(1).write.mode("append").text(src)
         t = 1_600_000_000 + i
         for f in set(os.listdir(src)) - before:
             os.utime(os.path.join(src, f), (t, t))
+
+
+def stage_cdc_phases(
+    spark: SparkSession, src: str, phases: list[DataFrame]
+) -> DataFrame:
+    """Stage the CDC envelope frames of ``phases`` under ``src``
+    (``stage_phases``) and open a one-file-per-trigger stream over them."""
+    stage_phases(src, phases)
     return (
         # sampled inference: single-table envelope — every data line carries
         # the full table payload, so a 5% line sample infers the same union

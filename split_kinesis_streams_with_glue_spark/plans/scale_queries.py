@@ -25,8 +25,6 @@ the approximate ops) and is tagged ``since=3`` for the rotation test.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.functions.textfns import (
@@ -45,6 +43,7 @@ from split_kinesis_streams_with_glue_spark.plans.registry import (
     load,
     query,
     stage_cdc_phases,
+    workspace,
 )
 
 
@@ -410,7 +409,7 @@ def pipeline_publish_time_travel(spark, sf_dir):
         uniqueness,
     )
 
-    path = tempfile.mkdtemp(prefix="sgs_tt_") + "/customer"
+    path = workspace("tt") + "/customer"
     cust = load(spark, sf_dir, "customer")
     checks = [completeness("c_custkey"), uniqueness("c_custkey")]
     v1 = write_audit_publish(cust.filter(F.col("c_nationkey") < 10), path, checks)
@@ -474,8 +473,6 @@ def layout_stats_prune(spark, sf_dir):
     factor itself is asserted in tests (typically <1/4 of files touched);
     here the driver checks the half that must never be wrong: skipping
     loses no rows."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.operators.layout import (
         read_pruned,
         write_clustered,
@@ -484,7 +481,7 @@ def layout_stats_prune(spark, sf_dir):
     o = load(spark, sf_dir, "orders").withColumn(
         "d", F.datediff(F.col("o_orderdate").cast("date"), F.lit("1970-01-01"))
     )
-    path = tempfile.mkdtemp(prefix="sgs_zc_") + "/orders"
+    path = workspace("zc") + "/orders"
     write_clustered(o, path, "o_custkey", "d", num_files=32)
     pruned = read_pruned(spark, path, a_range=(100, 220), b_range=(9500, 10200))
     return pruned.select("o_orderkey", "o_custkey", "o_totalprice")
@@ -571,7 +568,7 @@ def cdc_rollup_apply(spark, sf_dir):
     )
     from split_kinesis_streams_with_glue_spark.streaming.markers import start
 
-    base = tempfile.mkdtemp(prefix="sgs_cdcroll_")
+    base = workspace("cdcroll")
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     op = F.col("metadata.operation")
     stream = stage_cdc_phases(spark, f"{base}/src", [
@@ -612,13 +609,11 @@ def maintenance_compact_files(spark, sf_dir):
     is a narrow coalesce, no shuffle. The invariant the driver checks:
     compaction changes the file layout and NOTHING else — the table still
     reads back exactly as the source rows."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.operators.maintenance import (
         compact_small_files,
     )
 
-    path = tempfile.mkdtemp(prefix="sgs_maint_") + "/customer"
+    path = workspace("maint") + "/customer"
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
@@ -736,15 +731,13 @@ def events_stream_topk(spark, sf_dir):
     capacity-exceeded approximation path (admission at threshold, heavy
     keys guaranteed to survive, cnt bounds [true, true+err]) is pinned by
     unit tests; the operator's state is `capacity` rows forever."""
-    import tempfile
-
     from split_kinesis_streams_with_glue_spark.streaming.topk import (
         read_topk,
         stream_topk,
     )
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    base = tempfile.mkdtemp(prefix="sgs_topk_")
+    base = workspace("topk")
     ev.repartition(8).write.mode("overwrite").json(f"{base}/src")
     stream = (
         spark.readStream.schema("event_id long, ts timestamp, event_type string")
@@ -1345,7 +1338,7 @@ def join_dpp_dates(spark, sf_dir):
     physical plan; the oracle checks the join's semantics (the dim is
     exactly the distinct qualifying days, so the join IS the filter)."""
     ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    path = tempfile.mkdtemp(prefix="sgs_dpp_") + "/events_by_day"
+    path = workspace("dpp") + "/events_by_day"
     ev.select("event_id", "value", "day").write.partitionBy("day").parquet(path)
     fact = spark.read.parquet(path)
     dim = (

@@ -36,7 +36,7 @@ from tests.oracle_harness import (
 SF_DIR = "/root/testdata/sf0.001"
 
 _SIDE_EFFECT = re.compile(
-    r"tempfile|mkdtemp|foreachBatch|\.save\(|\.collect\(|write_audit|"
+    r"tempfile|mkdtemp|workspace\(|foreachBatch|\.save\(|\.collect\(|write_audit|"
     r"merge\(|awaitTermination|\.write\b"
 )
 
