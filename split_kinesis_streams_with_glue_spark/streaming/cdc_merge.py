@@ -140,28 +140,24 @@ def make_cdc_merger(
                     f"policy {sorted(compat_policy)} for table {table!r} "
                     f"(epoch {epoch_id}); batch failed before any write"
                 )
-        # Pin the batch once: the dirty census below AND the merge pool both
-        # consume delta — unpinned, the batch source is evaluated (and on the
-        # streaming path, its files re-read) twice per epoch. Bounded by
-        # construction: delta is one micro-batch. Pinned AFTER the
-        # compat_policy gate, which needs only delta.schema (no job), so a
-        # rejected batch pays no materialization on each retry. Caveat:
-        # localCheckpoint blocks are non-replicated — executor loss
-        # mid-epoch fails the batch instead of recomputing it (the stream
-        # retry covers it; acceptable for one micro-batch of work).
-        delta = delta.localCheckpoint(eager=True)
-        # The dirty-bucket census drives the stored-side scan, the emptied-
-        # bucket sweep, and on_merged — derive it ONCE (metadata-sized:
-        # ≤ num_buckets rows).
-        dirty_ids = {r[0] for r in delta.select("__bucket").distinct().collect()}
+        # Pin the batch once: the merge pool consumes delta, and unpinned,
+        # the batch source would be evaluated (and on the streaming path,
+        # its files re-read) again. The pin's own job also yields the
+        # dirty-bucket census (metadata-sized: <= num_buckets values),
+        # which drives the stored-side scan, the emptied-bucket sweep and
+        # on_merged. Pinned AFTER the compat_policy gate, which needs only
+        # delta.schema (no job), so a rejected batch pays no
+        # materialization on each retry.
+        delta, dirty_ids = state_table.pin(delta)
         if stored is None:
             pool = delta
         else:
             # only buckets this batch touches participate; untouched
             # partitions stay on disk as-is (dynamic overwrite). isin over
             # the partition column beats a broadcast join here: __bucket is
-            # the Hive partition key, so the predicate prunes at the file
-            # listing — the scan never opens untouched buckets.
+            # the Hive partition key, so the predicate prunes the listed
+            # partitions before the scan, which never opens the files of
+            # untouched buckets.
             # allowMissingColumns: a column added (or dropped) mid-stream
             # null-fills on the side that lacks it instead of being dropped
             pool = stored.filter(
@@ -385,12 +381,9 @@ def make_scd2_merger(
             "__bucket",
             F.pmod(F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(num_buckets)),
         )
-        # pin once: the dirty census AND the pool both consume delta — on
-        # the streaming path an unpinned batch source is read twice
-        delta = delta.localCheckpoint(eager=True)
-        dirty = {
-            int(r[0]) for r in delta.select("__bucket").distinct().collect()
-        }  # metadata-sized
+        # pin once, taking the dirty census from the pin's own job: on the
+        # streaming path an unpinned batch source is read again by the pool
+        delta, dirty = state_table.pin(delta)
         stored = state_table.read(spark, log_path)  # None: the first batch
         if stored is None:
             pool = delta

@@ -11,9 +11,9 @@ TABLE STATE, the same pattern the CDC merger uses for row state:
 
 - ``bands/``    (id, band, bucket) — the LSH blocking index, Hive-
   partitioned by ``__shard = pmod(bucket, n_shards)`` so a batch's probe
-  join prunes to the shards its buckets hash into (file-listing-level
-  pruning; a small batch touches few shards, a 100 TB index is never
-  scanned wholesale).
+  join prunes to the shards its buckets hash into (partition pruning
+  after the listing; a small batch touches few shards, a 100 TB index is
+  never scanned wholesale).
 - ``shingles/`` (id, sh) — per-doc distinct shingle hashes (xxhash64,
   8 bytes per distinct shingle, ~10-20 % of text size), enough to
   exact-verify candidate pairs without re-reading document text. Same
@@ -52,6 +52,7 @@ from split_kinesis_streams_with_glue_spark.operators.dedup import (
     shingle_sets,
 )
 from split_kinesis_streams_with_glue_spark.streaming.markers import _fs, once, start
+from split_kinesis_streams_with_glue_spark.streaming.state_table import pin
 
 
 def _read_or_none(spark, path: str) -> DataFrame | None:
@@ -73,27 +74,33 @@ def make_dedup_indexer(
     """Build the idempotent ``(doc_batch, epoch_id) -> None`` ingest
     function (exposed for direct replay testing, like the CDC merger's)."""
 
+    def shard(id_col: str):
+        # the shingle table's shard of a document id
+        return F.pmod(F.xxhash64(id_col), F.lit(n_shards))
+
     def ingest(batch: DataFrame, epoch_id: int, last) -> None:
         spark = batch.sparkSession
         # batch-side blocking state; the shingle frame feeds signatures AND
         # verification, so materialize it once (same rationale as
-        # minhash_near_dups)
-        sh = (
-            shingle_sets(batch, text_col, id_col, shingle_n)
-            .withColumn("sh", F.xxhash64("shingle"))
-            .localCheckpoint(eager=True)
+        # minhash_near_dups). Every census below comes out of the pin it
+        # follows (metadata-sized: <= n_shards values), not a job of its own.
+        sh, sh_shards = pin(
+            shingle_sets(batch, text_col, id_col, shingle_n).withColumn(
+                "sh", F.xxhash64("shingle")
+            ),
+            shard("id"),
         )
         # no shingles (an empty batch, or only null or too-short texts):
         # write nothing, since a partitioned append of zero rows would
         # leave the index directories with no data file to read back
-        if not sh.take(1):
+        if not sh_shards:
             return
         sigs = minhash_signatures(sh, num_hashes).localCheckpoint(eager=True)
         # banding inline (lsh_candidate_pairs pairs within ONE frame; here
         # the two sides differ, so band the batch and probe the store)
         rows_per_band = 2
         n_bands = num_hashes // rows_per_band
-        batch_bands = sigs.select(
+        bands = sigs.select(
             "id",
             F.explode(
                 F.array(
@@ -111,7 +118,9 @@ def make_dedup_indexer(
                     ]
                 )
             ).alias("bb"),
-        ).select("id", "bb.band", "bb.bucket").localCheckpoint(eager=True)
+        ).select("id", "bb.band", "bb.bucket")
+        band_shard = F.pmod(F.col("bucket"), F.lit(n_shards))
+        batch_bands, probe_shards = pin(bands, band_shard)
 
         # ---- candidates: within-batch + batch-vs-stored (pruned probe)
         a = batch_bands.alias("a")
@@ -127,15 +136,8 @@ def make_dedup_indexer(
         )
         stored_bands = _read_or_none(spark, f"{index_path}/bands")
         if stored_bands is not None:
-            probe_shards = [
-                r[0]
-                for r in batch_bands.select(
-                    F.pmod(F.col("bucket"), F.lit(n_shards)).alias("s")
-                )
-                .distinct()
-                .collect()
-            ]  # metadata-sized: <= n_shards values
-            s = stored_bands.filter(F.col("__shard").isin(probe_shards)).alias("s")
+            s = stored_bands.filter(F.col("__shard").isin(list(probe_shards)))
+            s = s.alias("s")
             n = batch_bands.alias("n")
             cross = s.join(
                 n,
@@ -149,7 +151,7 @@ def make_dedup_indexer(
             cands = within.unionByName(cross).distinct()
         else:
             cands = within.distinct()
-        cands = cands.localCheckpoint(eager=True)
+        cands, id_shards = pin(cands, shard("d1"), shard("d2"))
 
         # ---- exact verification on hashed shingle sets (batch + stored)
         batch_sh = sh.select("id", "sh")
@@ -158,16 +160,8 @@ def make_dedup_indexer(
             cand_ids = cands.select(F.col("d1").alias("id")).unionByName(
                 cands.select(F.col("d2").alias("id"))
             ).distinct()
-            id_shards = [
-                r[0]
-                for r in cand_ids.select(
-                    F.pmod(F.xxhash64("id"), F.lit(n_shards)).alias("s")
-                )
-                .distinct()
-                .collect()
-            ]
             pool = (
-                stored_sh.filter(F.col("__shard").isin(id_shards))
+                stored_sh.filter(F.col("__shard").isin(list(id_shards)))
                 .join(F.broadcast(cand_ids), "id", "left_semi")
                 .select("id", "sh")
                 .unionByName(batch_sh)
@@ -180,14 +174,12 @@ def make_dedup_indexer(
 
         # ---- appends; ``once`` commits the epoch marker after them
         verified.write.mode("append").parquet(f"{index_path}/pairs")
-        batch_bands.withColumn(
-            "__shard", F.pmod(F.col("bucket"), F.lit(n_shards))
-        ).write.partitionBy("__shard").mode("append").parquet(f"{index_path}/bands")
-        batch_sh.withColumn(
-            "__shard", F.pmod(F.xxhash64("id"), F.lit(n_shards))
-        ).write.partitionBy("__shard").mode("append").parquet(
-            f"{index_path}/shingles"
-        )
+        batch_bands.withColumn("__shard", band_shard).write.partitionBy(
+            "__shard"
+        ).mode("append").parquet(f"{index_path}/bands")
+        batch_sh.withColumn("__shard", shard("id")).write.partitionBy(
+            "__shard"
+        ).mode("append").parquet(f"{index_path}/shingles")
 
     return once(f"{index_path}/_last_epoch", ingest)
 

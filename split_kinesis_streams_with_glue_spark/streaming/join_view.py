@@ -13,9 +13,10 @@ side changes through CDC:
   incremental join maintenance local.
 - Per epoch, after the row merge, only the dirty buckets' partials are
   recomputed: the freshly merged dimension rows of those buckets join the
-  fact rows of THE SAME bucket partitions (file-listing pruning — clean
-  fact buckets are never opened), aggregate to per-(bucket, group)
-  partials, and dynamic-overwrite those partial partitions. Retraction is
+  fact rows of THE SAME bucket partitions (partition pruning after the
+  listing — clean fact buckets' files are never opened), aggregate to
+  per-(bucket, group) partials, and dynamic-overwrite those partial
+  partitions. Retraction is
   implicit: a deleted/updated dimension row simply isn't in the merged
   bucket anymore, so its old join contributions vanish with the rewrite.
 - ``read_join_view`` folds the bounded partial table (num_buckets ×
@@ -137,7 +138,8 @@ def make_symmetric_join_view_mergers(
     ``make_cdc_merger``'s ``bucket_cols`` contract) and one view updater.
     Whichever side merges, the view recomputes partials for the buckets
     THAT epoch dirtied, joining the two materialized tables' rows of
-    those buckets only (both reads prune at the file listing). Clean
+    those buckets only (both reads prune the listed partitions, so only
+    dirty buckets' files are opened). Clean
     buckets' partials stay exactly valid because neither side's rows in
     them changed — the co-bucketing invariant. Returns
     ``(left_merge, right_merge)``; read with ``read_join_view``.

@@ -30,6 +30,17 @@ the table's size. The contract:
   a schema holding the partition column; otherwise (a torn or foreign
   file, a table written before sidecars existed) it falls back to
   ``mergeSchema``.
+- **Listing.** ``read`` builds its lazy DataFrame by listing every
+  partition directory. ``session.get_spark`` sets Spark's
+  parallel-discovery threshold to 1024 partition dirs, so a table of up
+  to 1024 buckets is listed on the driver and the read starts no Spark
+  job; a larger one (4096 buckets for 100 TB) is listed by a parallel
+  job. A partition filter (``isin`` on the partition column) prunes
+  after the listing: the scan opens only the dirty partitions' files.
+- **Census from the pin.** ``pin`` materializes an epoch's batch once
+  (``localCheckpoint``) and returns the set of partition values it holds,
+  from an ``Observation`` that rides the checkpoint's own job: the dirty
+  census costs no job of its own.
 - **The partition column is immutable per key.** An update that moved a
   key to another partition would strand its old version in the old one,
   which no epoch dirties again. Key-hash buckets of a primary or foreign
@@ -41,7 +52,7 @@ from __future__ import annotations
 import json
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -50,6 +61,21 @@ from split_kinesis_streams_with_glue_spark.streaming.markers import (
     read_text_marker,
     write_text_marker,
 )
+
+
+def pin(df: DataFrame, *cols: str | Column) -> tuple[DataFrame, set]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it with the set of
+    values that ``cols`` (default: ``__bucket``) take in it, observed by
+    the checkpoint's own job. Meant for metadata-sized censuses (bucket or
+    shard ids) of a bounded frame such as one micro-batch. The pin's
+    blocks are not replicated: losing an executor mid-epoch fails the
+    batch, and the stream retries it."""
+    obs = Observation()
+    censuses = [
+        F.collect_set(c).alias(f"v{i}") for i, c in enumerate(cols or ["__bucket"])
+    ]
+    pinned = df.observe(obs, *censuses).localCheckpoint(eager=True)
+    return pinned, set().union(*obs.get.values())
 
 
 def write(df: DataFrame, path: str, dirty: Iterable, col: str = "__bucket") -> set:

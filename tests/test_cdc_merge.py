@@ -494,10 +494,8 @@ def test_scd2_incremental_matches_batch_and_replays(spark, sf_dir, tmp_path):
 def test_scd2_stream_end_to_end(spark, sf_dir, tmp_path):
     """The streaming SCD2 wrapper drains a file-source backlog; the
     resulting validity table equals the one-shot scd2_history."""
-    import os as _os
-
-    from split_kinesis_streams_with_glue_spark.envelope import to_json_lines
     from split_kinesis_streams_with_glue_spark.operators.compact import scd2_history
+    from split_kinesis_streams_with_glue_spark.plans.registry import stage_phases
     from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
         infer_envelope_schema,
     )
@@ -508,15 +506,7 @@ def test_scd2_stream_end_to_end(spark, sf_dir, tmp_path):
 
     env, phases = _phases(spark, sf_dir)
     src = str(tmp_path / "src")
-    _os.makedirs(src)
-    stamped: set = set()
-    for i, ph in enumerate(phases):
-        to_json_lines(ph).coalesce(1).write.mode("append").text(src)
-        for f in _os.listdir(src):
-            p = _os.path.join(src, f)
-            if p not in stamped:
-                _os.utime(p, (1_600_000_000 + i, 1_600_000_000 + i))
-                stamped.add(p)
+    stage_phases(src, phases)
     stream = (
         spark.readStream.schema(infer_envelope_schema(spark, src))
         .option("maxFilesPerTrigger", "1")

@@ -167,9 +167,7 @@ def test_join_view_stream_end_to_end(spark, sf_dir, tmp_path):
     """The streaming wrapper drains a file-source envelope backlog through
     the join-view merger; the folded view equals the from-scratch join of
     the final materialized state."""
-    import os as _os
-
-    from split_kinesis_streams_with_glue_spark.envelope import to_json_lines
+    from split_kinesis_streams_with_glue_spark.plans.registry import stage_phases
     from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
         infer_envelope_schema,
     )
@@ -184,16 +182,8 @@ def test_join_view_stream_end_to_end(spark, sf_dir, tmp_path):
     bucket_copy(orders, "o_custkey", facts, 8)
     env = generate_cdc_envelopes(spark, sf_dir, "customer", "c_custkey", "c_acctbal")
     src = str(tmp_path / "src")
-    _os.makedirs(src)
     op = F.col("metadata.operation")
-    stamped: set = set()
-    for i, phase in enumerate(["load", "update", "delete"]):
-        to_json_lines(env.filter(op == phase)).coalesce(1).write.mode("append").text(src)
-        for f in _os.listdir(src):
-            p = _os.path.join(src, f)
-            if p not in stamped:
-                _os.utime(p, (1_600_000_000 + i, 1_600_000_000 + i))
-                stamped.add(p)
+    stage_phases(src, [env.filter(op == p) for p in ["load", "update", "delete"]])
     stream = (
         spark.readStream.schema(infer_envelope_schema(spark, src))
         .option("maxFilesPerTrigger", "1")
