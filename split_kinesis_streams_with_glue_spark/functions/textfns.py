@@ -28,8 +28,10 @@ def whitespace_tokens(text: Column | str) -> Column:
 
 
 def word_shingles(tokens: Column, n: int = 3) -> Column:
-    """Distinct n-word shingles from a token array — the unit set for
-    Jaccard/MinHash dedup. Pure array HOF: sequence + transform + slice.
+    """Distinct n-word shingles from a token array. Pure array HOF:
+    sequence + transform + slice, evaluated per element outside codegen;
+    text is shingled with ``text_shingles``, which tests check against
+    this formulation.
 
     Docs shorter than ``n`` tokens yield an EMPTY set via an explicit
     guard: ``sequence(0, -1)`` is the descending ``[0, -1]`` in Spark, not
@@ -43,6 +45,27 @@ def word_shingles(tokens: Column, n: int = 3) -> Column:
             )
         ),
     ).otherwise(F.array().cast("array<string>"))
+
+
+def text_shingles(text: Column | str, n: int = 3) -> Column:
+    """Distinct n-word shingles of a text, lower-cased: the same array, in
+    the same order, as ``word_shingles(whitespace_tokens(lower(text)), n)``
+    (an empty array for null or fewer than ``n`` words), but from built-in
+    regex expressions only, so it runs in whole-stage codegen where the
+    lambda composition is interpreted per element.
+
+    Whitespace runs collapse to one space, then one zero-width match per
+    token start (a position not preceded by a non-space) captures that
+    token and the ``n - 1`` after it."""
+    c = F.col(text) if isinstance(text, str) else text
+    norm = F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+    window = " ".join(["[^ ]+"] * n)
+    return F.coalesce(
+        F.array_distinct(
+            F.regexp_extract_all(norm, F.lit(f"(?<![^ ])(?=({window}))"), F.lit(1))
+        ),
+        F.array().cast("array<string>"),
+    )
 
 
 def fingerprint(text: Column | str) -> Column:

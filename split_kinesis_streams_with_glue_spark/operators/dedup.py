@@ -8,10 +8,12 @@ corpus, all expressed as DataFrame plans:
 - **n-gram Jaccard**: shingle-explode → self-join on shingle → count
   intersections. Exact but quadratic in the worst case; kept as the oracle
   ground truth and for small/filtered candidate sets.
-- **MinHash LSH**: shingles → k minhashes → band buckets → join on bucket →
-  exact-verify candidates. The scale path: the join key space is (band,
-  hash) buckets, so the shuffle is linear in corpus size; only candidate
-  pairs (a vanishing fraction) reach the exact verification.
+- **MinHash LSH**: per-document shingle arrays → band buckets (two
+  min-hash lanes per band, aggregated per (doc, band)) → pairs within each
+  bucket group → exact-verify candidates by array intersection. The scale
+  path: the grouping key space is (band, bucket), so the shuffles are
+  linear in corpus size; only candidate pairs (a vanishing fraction) reach
+  the exact verification. No stage evaluates a lambda function.
 - **SimHash**: 64-bit signature via per-token hash bit voting; near-dups =
   signatures within small Hamming distance, bucketed by 16-bit chunks
   (pigeonhole: hamming ≤ 3 ⇒ some chunk matches exactly).
@@ -26,8 +28,8 @@ from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.functions.textfns import (
     fingerprint,
+    text_shingles,
     whitespace_tokens,
-    word_shingles,
 )
 
 
@@ -95,14 +97,12 @@ def shingle_sets(
 ) -> DataFrame:
     """(id, shingle) exploded distinct shingle sets.
 
-    Distinct by construction — ``word_shingles`` applies ``array_distinct``
+    Distinct by construction — ``text_shingles`` applies ``array_distinct``
     per document and ids are unique, so no dedup shuffle is needed here.
     """
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(word_shingles(whitespace_tokens(F.lower(F.col(text_col))), n)).alias(
-            "shingle"
-        ),
+        F.explode(text_shingles(F.col(text_col), n)).alias("shingle"),
     )
 
 
@@ -112,33 +112,28 @@ def jaccard_pairs(
     """Exact Jaccard-similar pairs (d1 < d2, jac >= threshold) from an
     (id, shingle) frame.
 
-    With ``candidates`` (a (d1, d2) frame), only those pairs are scored —
-    the LSH verification path: the candidate list is joined in BEFORE the
-    shingle-intersection join, so work is linear in candidate pairs, never
-    quadratic in co-shingled docs. Without, scores all co-shingled pairs —
-    the exact (quadratic-worst-case) path used as ground truth.
+    With ``candidates`` (a distinct (d1, d2) frame), only those pairs are
+    scored — the LSH verification path: each document's shingles are
+    collected into one array and ``_set_jaccard`` intersects the two arrays
+    of each candidate, so work is linear in candidate pairs, never
+    quadratic in co-shingled docs. Pairs sharing no shingle are dropped.
+    Without, scores all co-shingled pairs — the exact
+    (quadratic-worst-case) path used as ground truth.
     """
-    sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
     if candidates is not None:
-        a = shingles.select(F.col("id").alias("d1"), "shingle")
-        b = shingles.select(F.col("id").alias("d2"), "shingle")
-        inter = (
-            candidates.join(a, "d1")
-            .join(b, ["d2", "shingle"])
-            .groupBy("d1", "d2")
-            .agg(F.count(F.lit(1)).alias("ix"))
+        sets = shingles.groupBy("id").agg(F.collect_set("shingle").alias("s"))
+        return _set_jaccard(sets, candidates, threshold)
+    sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    a = shingles.alias("a")
+    b = shingles.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
         )
-    else:
-        a = shingles.alias("a")
-        b = shingles.alias("b")
-        inter = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"))
-            .agg(F.count(F.lit(1)).alias("ix"))
-        )
+        .groupBy(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"))
+        .agg(F.count(F.lit(1)).alias("ix"))
+    )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
     return (
@@ -166,80 +161,84 @@ def _hash_family(num_hashes: int) -> tuple[list[int], list[int]]:
     return a, b
 
 
-def minhash_signatures(
-    shingles: DataFrame, num_hashes: int = 128
-) -> DataFrame:
-    """(id, sig array<long>) — sig[i] = min over shingles of lane-i hash.
+#: MinHash lanes per LSH band: b = num_hashes / 2 bands
+ROWS_PER_BAND = 2
 
-    One xxhash64 per shingle; lane i is the universal hash
-    ``(a_i*h + b_i) mod p`` inlined INSIDE its min aggregate — k scalar
-    long expressions in whole-stage codegen, no intermediate array, no
-    interpreted higher-order functions (a ``zip_with`` lambda formulation
-    measured ~20× slower: HOF lambdas don't codegen). One groupBy on id
-    with k min aggregates (map-side partial combine). The modulus is what
-    de-correlates lanes — without it the map is monotone in h and every
+
+def minhash_bands(shingles: DataFrame, num_hashes: int = 128) -> DataFrame:
+    """(id, band, bucket) LSH band buckets of an (id, shingle) frame, with
+    no signature array: band b's bucket is ``xxhash64`` of lanes
+    ``b*r .. b*r + r-1`` (r = ``ROWS_PER_BAND``) of the ``num_hashes``-lane
+    MinHash signature, where lane i is ``min over shingles of
+    (a_i*h + b_i) mod p``.
+
+    Each shingle row is exploded against one literal array of per-band
+    coefficient structs, and one group-by on (id, band) takes ``r`` min
+    aggregates. The aggregate is ``r + 2`` fields wide, so it stays in
+    whole-stage codegen whatever ``num_hashes`` is. The modulus is what
+    de-correlates lanes: without it the map is monotone in h and every
     lane would pick the same shingle."""
     a, b = _hash_family(num_hashes)
     p = (1 << 31) - 1
+    r = ROWS_PER_BAND
+    lanes = F.array(
+        *[
+            F.struct(
+                F.lit(band).alias("band"),
+                *[F.lit(a[band * r + j]).alias(f"a{j}") for j in range(r)],
+                *[F.lit(b[band * r + j]).alias(f"b{j}") for j in range(r)],
+            )
+            for band in range(num_hashes // r)
+        ]
+    )
     h0 = F.xxhash64(F.col("shingle")).bitwiseAND(F.lit(0xFFFFFFFF))
-    agged = (
-        shingles.withColumn("__h0", h0)
-        .groupBy("id")
+    return (
+        shingles.select("id", h0.alias("__h0"), F.explode(lanes).alias("__l"))
+        .groupBy("id", F.col("__l.band").alias("band"))
         .agg(
             *[
-                F.min(F.pmod(F.col("__h0") * F.lit(a[i]) + F.lit(b[i]), F.lit(p))).alias(
-                    f"__m{i}"
-                )
-                for i in range(num_hashes)
+                F.min(
+                    F.pmod(F.col("__h0") * F.col(f"__l.a{j}") + F.col(f"__l.b{j}"), F.lit(p))
+                ).alias(f"__m{j}")
+                for j in range(r)
             ]
         )
-    )
-    return agged.select(
-        "id", F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("sig")
+        .select("id", "band", F.xxhash64(*[f"__m{j}" for j in range(r)]).alias("bucket"))
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, num_hashes: int, rows_per_band: int = 2
-) -> DataFrame:
-    """Band the signature (r rows/band), bucket-join on (band, band-hash).
-
-    Pair probability 1-(1-j^r)^b: r=2, b=64 catches j >= 0.5 with miss
-    probability < 1e-8. The self-join key is the band bucket — collision
-    groups are tiny, so the join output stays near-linear.
-
-    ``num_hashes`` is required: deriving it with a ``first()`` probe on the
-    signature frame would re-execute the whole signature aggregate just to
-    read an array length.
-    """
-    bands = num_hashes // rows_per_band
-    banded = signatures.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[F.col("sig")[bi * rows_per_band + r] for r in range(rows_per_band)]
-                        ).alias("bucket"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bb"),
-    ).select("id", "bb.band", "bb.bucket")
-    a = banded.alias("a")
-    b = banded.alias("b")
+def bucket_pairs(bands: DataFrame) -> DataFrame:
+    """Distinct (d1, d2), d1 < d2, of ids sharing any (band, bucket) of an
+    (id, band, bucket) frame. Each bucket group collects its sorted ids
+    once and emits its pairs by position, so there is no band self-join.
+    A bucket holding k ids emits k(k-1)/2 pairs from one task."""
+    groups = (
+        bands.groupBy("band", "bucket")
+        .agg(F.sort_array(F.collect_set("id")).alias("ids"))
+        .filter(F.size("ids") >= 2)
+    )
     return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"))
+        groups.select("ids", F.posexplode("ids").alias("__i", "d1"))
+        .select("d1", F.explode(F.slice("ids", F.col("__i") + 2, F.size("ids"))).alias("d2"))
         .distinct()
+    )
+
+
+def _set_jaccard(sets: DataFrame, candidates: DataFrame, threshold: float) -> DataFrame:
+    """(d1, d2, jaccard) of the ``candidates`` pairs, scored over an
+    (id, s) frame of distinct-shingle arrays as
+    ``|s1 ∩ s2| / (|s1| + |s2| - |s1 ∩ s2|)``; keeps pairs that share a
+    shingle and reach ``threshold``. Pairs with an id missing from
+    ``sets`` drop out."""
+    a = sets.select(F.col("id").alias("d1"), F.col("s").alias("__s1"))
+    b = sets.select(F.col("id").alias("d2"), F.col("s").alias("__s2"))
+    ix = F.size(F.array_intersect("__s1", "__s2"))
+    scored = candidates.join(a, "d1").join(b, "d2").select(
+        "d1", "d2", ix.alias("__ix"), (F.size("__s1") + F.size("__s2")).alias("__n")
+    )
+    jac = F.col("__ix") / (F.col("__n") - F.col("__ix"))
+    return scored.filter(F.col("__ix") > 0).select("d1", "d2", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -254,23 +253,30 @@ def minhash_near_dups(
     """MinHash LSH near-dup pairs, exact-verified: LSH proposes candidates,
     exact Jaccard on the candidate set filters false positives — output is
     identical to the brute-force ground truth up to the (negligible at these
-    parameters) LSH miss probability.
+    parameters) LSH miss probability. Banding is r=2 rows per band, so with
+    b = ``num_hashes``/2 bands a pair at Jaccard j is missed with probability
+    (1-j^2)^b: about 1e-8 at j = 0.5 with 128 hashes, less above it.
 
-    The shingle frame feeds three plan branches (signatures + both sides of
-    the verification join); an eager ``localCheckpoint`` materializes it
-    once and truncates lineage, so the tokenize/shingle/explode work runs
-    exactly once. (A ``persist()`` + ``unpersist()`` in a ``finally`` here
-    would be a bug: the unpersist fires at plan-build time, before the
-    caller ever executes the returned frame.)"""
-    sh = shingle_sets(df, text_col, id_col, shingle_n).localCheckpoint(eager=True)
-    # the signature frame is tiny (one row per doc) but its 128-lane min
-    # aggregate is the most expensive expression tree in the plan — and the
-    # banded self-join would evaluate it once PER SIDE (no ReusedExchange
-    # fires across the a/b aliases; verified on the executed plan).
-    # Checkpointing pins it to exactly one evaluation.
-    sigs = minhash_signatures(sh, num_hashes).localCheckpoint(eager=True)
-    cands = lsh_candidate_pairs(sigs, num_hashes=num_hashes)
-    return jaccard_pairs(sh, threshold, candidates=cands)
+    Every stage is a built-in expression, with no lambda function evaluated
+    per element; the shingling and the band aggregate run in whole-stage
+    codegen. Each document's shingle array (``text_shingles``) is computed
+    once and pinned (``localCheckpoint``);
+    ``minhash_bands`` buckets the exploded shingles, ``bucket_pairs`` turns
+    the bucket groups into candidates, and ``_set_jaccard`` scores each
+    candidate by intersecting the two pinned arrays. (A ``persist()`` +
+    ``unpersist()`` in a ``finally`` here would be a bug: the unpersist
+    fires at plan-build time, before the caller ever executes the returned
+    frame.)"""
+    sets = (
+        df.select(
+            F.col(id_col).alias("id"), text_shingles(F.col(text_col), shingle_n).alias("s")
+        )
+        .filter(F.size("s") > 0)
+        .localCheckpoint(eager=True)
+    )
+    sh = sets.select("id", F.explode("s").alias("shingle"))
+    cands = bucket_pairs(minhash_bands(sh, num_hashes))
+    return _set_jaccard(sets, cands, threshold)
 
 
 def simhash_signatures(
@@ -737,9 +743,7 @@ def group_vocab_overlap(
     least one shingle."""
     vocab = df.select(
         F.col(group_col).alias("__g"),
-        F.explode(
-            word_shingles(whitespace_tokens(F.lower(F.col(text_col))), n)
-        ).alias("__s"),
+        F.explode(text_shingles(F.col(text_col), n)).alias("__s"),
     ).distinct()
     sizes = vocab.groupBy("__g").agg(F.count(F.lit(1)).alias("__n"))
     a = vocab.select(F.col("__g").alias("g1"), "__s")

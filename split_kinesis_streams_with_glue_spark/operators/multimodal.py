@@ -362,7 +362,8 @@ def phash_pairs(
     """Image near-dup candidate PAIRS with Hamming verification — the
     verify stage that completes ``phash_buckets``' candidate stage into
     the full LSH candidates→verify geometry (Leskovec–Rajaraman–Ullman
-    MMDS §3.4; the same two-stage shape as ``dedup.minhash_near_dups``):
+    MMDS §3.4; the two-stage shape of ``dedup.minhash_near_dups``, which
+    pairs bucket members from their collected id groups instead):
     images sharing ANY band of their fingerprint become a candidate
     pair, each pair is checked ONCE (bucket-confined self-join,
     de-duplicated across bands by the id ordering), and the verdict is

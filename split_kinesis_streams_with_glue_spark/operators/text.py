@@ -12,8 +12,8 @@ from split_kinesis_streams_with_glue_spark.functions.textfns import (
     LANG_MARKERS,
     TOKEN_PATTERN,
     fingerprint,
+    text_shingles,
     whitespace_tokens,
-    word_shingles,
 )
 
 
@@ -189,21 +189,14 @@ def decontaminate(
     broadcasts — the corpus side is ONE explode scan + broadcast-hash
     semi-match + per-doc count, no shuffle of corpus text. Docs too short
     to form a shingle score 0 via the left join."""
-    def shingles(col):
-        t = whitespace_tokens(F.lower(col))
-        # guard: word_shingles' index sequence is malformed below n tokens
-        return F.when(F.size(t) >= n, word_shingles(t, n)).otherwise(
-            F.array().cast("array<string>")
-        )
-
     bench = (
-        benchmark.select(F.explode(shingles(F.col(text_col))).alias("shingle"))
+        benchmark.select(F.explode(text_shingles(F.col(text_col), n)).alias("shingle"))
         .distinct()
     )
     doc_sh = df.select(
-        F.col(id_col), F.explode(shingles(F.col(text_col))).alias("shingle")
+        F.col(id_col), F.explode(text_shingles(F.col(text_col), n)).alias("shingle")
     )
-    # word_shingles de-dups within doc => count(*) == distinct matching shingles
+    # text_shingles de-dups within doc => count(*) == distinct matching shingles
     hits = (
         doc_sh.join(F.broadcast(bench), "shingle")
         .groupBy(id_col)

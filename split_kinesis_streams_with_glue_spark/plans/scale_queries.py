@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.functions.textfns import (
+    text_shingles,
     whitespace_tokens,
-    word_shingles,
 )
 from split_kinesis_streams_with_glue_spark.operators.layout import with_zvalue
 from split_kinesis_streams_with_glue_spark.operators.profile import profile_table
@@ -232,23 +232,17 @@ def text_bloom_decontaminate(spark, sf_dir):
     computes both the bloom flag and the exact flag."""
     m_bits, k_hashes, n = 1 << 20, 16, 5
 
-    def shingles(col):
-        t = whitespace_tokens(F.lower(col))
-        return F.when(F.size(t) >= n, word_shingles(t, n)).otherwise(
-            F.array().cast("array<string>")
-        )
-
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("source") != "src0")
     bench_sh = (
         d.filter(F.col("source") == "src0")
-        .select(F.explode(shingles(F.col("text"))).alias("shingle"))
+        .select(F.explode(text_shingles(F.col("text"), n)).alias("shingle"))
         .distinct()
     )
     bloom = bloom_build(bench_sh, "shingle", m_bits, k_hashes)
     flags = (
         corpus.select(
-            "doc_id", F.explode_outer(shingles(F.col("text"))).alias("shingle")
+            "doc_id", F.explode_outer(text_shingles(F.col("text"), n)).alias("shingle")
         )
         .crossJoin(F.broadcast(bloom))
         .join(

@@ -59,16 +59,17 @@ def get_spark(
         # (truncate to micros — matching what DuckDB's reader does).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Whole-stage codegen gives up on operators wider than maxFields
-        # (default 100). The MinHash signature HashAggregate is 129 fields
-        # (id + 128 min lanes), so BOTH its partial and final aggregates ran
-        # INTERPRETED — measured ~4.0 s vs ~0.7 s stage floor at sf0.1, and
-        # a consistent 15-25% on the full dedup_minhash_lsh query once
-        # codegen fires (executed-plan proof: the aggregates gain *(n)
+        # (default 100). The widest registry aggregate that fits under 160
+        # is sim_silhouette_simplified's per-label centroid mean over the
+        # 64-dim embeddings: its partial HashAggregate is 129 fields (label
+        # + 64 sum/count buffer pairs), so at 100 both its partial and final
+        # aggregates run INTERPRETED (executed-plan proof: they gain *(n)
         # markers at 160). Width is a property of the PLAN, not the cluster,
         # so this holds at any scale/core count. 160 (not unbounded) keeps
         # genuinely enormous plans on the interpreted path where codegen
-        # class size would hurt compile time. (tests/test_plans.py pins the
-        # codegen marker on the signature aggregate.)
+        # class size would hurt compile time: approx_count_distinct's HLL
+        # buffers make ~1640-field aggregates. (scripts/widest_aggregates.py
+        # scans every registry query's aggregates for their width.)
         .config("spark.sql.codegen.maxFields", "160")
         # A path with more partition dirs than this threshold (default 32)
         # is listed by a Spark job of one task per dir, every time a lazy

@@ -22,14 +22,21 @@ TABLE STATE, the same pattern the CDC merger uses for row state:
 - ``pairs/``    (d1, d2, jaccard) with d1 < d2 — every verified near-dup
   pair, appended as discovered.
 
-Per epoch the work is O(batch + probed shards + candidate pairs):
-signatures/bands for the batch only, one pruned probe join against the
-stored bands, exact Jaccard on candidates only. Pair discovery is
-arrival-order independent: a pair is found when its LATER-ARRIVING member
-is ingested (the earlier one is in the index), or within-batch when both
-arrive together, and is always normalized to (min_id, max_id) — so the
-accumulated pair set equals the one-shot batch LSH's pair set regardless
-of how documents were split into batches. ``read_dup_flags`` derives the
+Each table is appended through ``state_table.append``, which records its
+``_schema`` sidecar, so ``state_table.read`` opens it without a Parquet
+footer-inference job.
+
+Per epoch the work is O(batch + probed shards + candidate pairs): band
+buckets for the batch only (``minhash_bands``, no signature array),
+within-batch candidates from the batch's bucket groups
+(``bucket_pairs``), one pruned probe join against the stored bands, and
+exact Jaccard on candidates only (``jaccard_pairs``' array-intersection
+scoring). Pair discovery is arrival-order independent: a pair is found
+when its LATER-ARRIVING member is ingested (the earlier one is in the
+index), or within-batch when both arrive together, and is always
+normalized to (min_id, max_id) — so the accumulated pair set equals the
+one-shot batch LSH's pair set regardless of how documents were split
+into batches. ``read_dup_flags`` derives the
 min-id-survivor verdict (doc_id, dup_of) from the pair table.
 
 Replay safety: at-least-once ``foreachBatch`` delivery is handled by the
@@ -47,19 +54,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.operators.dedup import (
+    bucket_pairs,
     jaccard_pairs,
-    minhash_signatures,
+    minhash_bands,
     shingle_sets,
 )
-from split_kinesis_streams_with_glue_spark.streaming.markers import _fs, once, start
-from split_kinesis_streams_with_glue_spark.streaming.state_table import pin
-
-
-def _read_or_none(spark, path: str) -> DataFrame | None:
-    """The index table at ``path``, or None before its first append (a
-    filesystem check; no Spark read of an absent path)."""
-    fs, p, _ = _fs(spark, path)
-    return spark.read.parquet(path) if fs.exists(p) else None
+from split_kinesis_streams_with_glue_spark.streaming import state_table
+from split_kinesis_streams_with_glue_spark.streaming.markers import once, start
 
 
 def make_dedup_indexer(
@@ -80,11 +81,11 @@ def make_dedup_indexer(
 
     def ingest(batch: DataFrame, epoch_id: int, last) -> None:
         spark = batch.sparkSession
-        # batch-side blocking state; the shingle frame feeds signatures AND
-        # verification, so materialize it once (same rationale as
-        # minhash_near_dups). Every census below comes out of the pin it
-        # follows (metadata-sized: <= n_shards values), not a job of its own.
-        sh, sh_shards = pin(
+        # batch-side blocking state; the shingle frame feeds the bands AND
+        # verification, so materialize it once. Every census below comes
+        # out of the pin it follows (metadata-sized: <= n_shards values),
+        # not a job of its own.
+        sh, sh_shards = state_table.pin(
             shingle_sets(batch, text_col, id_col, shingle_n).withColumn(
                 "sh", F.xxhash64("shingle")
             ),
@@ -95,46 +96,14 @@ def make_dedup_indexer(
         # leave the index directories with no data file to read back
         if not sh_shards:
             return
-        sigs = minhash_signatures(sh, num_hashes).localCheckpoint(eager=True)
-        # banding inline (lsh_candidate_pairs pairs within ONE frame; here
-        # the two sides differ, so band the batch and probe the store)
-        rows_per_band = 2
-        n_bands = num_hashes // rows_per_band
-        bands = sigs.select(
-            "id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(bi).alias("band"),
-                            F.xxhash64(
-                                *[
-                                    F.col("sig")[bi * rows_per_band + r]
-                                    for r in range(rows_per_band)
-                                ]
-                            ).alias("bucket"),
-                        )
-                        for bi in range(n_bands)
-                    ]
-                )
-            ).alias("bb"),
-        ).select("id", "bb.band", "bb.bucket")
         band_shard = F.pmod(F.col("bucket"), F.lit(n_shards))
-        batch_bands, probe_shards = pin(bands, band_shard)
+        batch_bands, probe_shards = state_table.pin(
+            minhash_bands(sh, num_hashes), band_shard
+        )
 
         # ---- candidates: within-batch + batch-vs-stored (pruned probe)
-        a = batch_bands.alias("a")
-        b = batch_bands.alias("b")
-        within = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("d1"), F.col("b.id").alias("d2"))
-        )
-        stored_bands = _read_or_none(spark, f"{index_path}/bands")
+        within = bucket_pairs(batch_bands)
+        stored_bands = state_table.read(spark, f"{index_path}/bands", "__shard")
         if stored_bands is not None:
             s = stored_bands.filter(F.col("__shard").isin(list(probe_shards)))
             s = s.alias("s")
@@ -150,12 +119,12 @@ def make_dedup_indexer(
             )
             cands = within.unionByName(cross).distinct()
         else:
-            cands = within.distinct()
-        cands, id_shards = pin(cands, shard("d1"), shard("d2"))
+            cands = within
+        cands, id_shards = state_table.pin(cands, shard("d1"), shard("d2"))
 
         # ---- exact verification on hashed shingle sets (batch + stored)
         batch_sh = sh.select("id", "sh")
-        stored_sh = _read_or_none(spark, f"{index_path}/shingles")
+        stored_sh = state_table.read(spark, f"{index_path}/shingles", "__shard")
         if stored_sh is not None:
             cand_ids = cands.select(F.col("d1").alias("id")).unionByName(
                 cands.select(F.col("d2").alias("id"))
@@ -173,13 +142,13 @@ def make_dedup_indexer(
         )
 
         # ---- appends; ``once`` commits the epoch marker after them
-        verified.write.mode("append").parquet(f"{index_path}/pairs")
-        batch_bands.withColumn("__shard", band_shard).write.partitionBy(
-            "__shard"
-        ).mode("append").parquet(f"{index_path}/bands")
-        batch_sh.withColumn("__shard", shard("id")).write.partitionBy(
-            "__shard"
-        ).mode("append").parquet(f"{index_path}/shingles")
+        state_table.append(verified, f"{index_path}/pairs")
+        state_table.append(
+            batch_bands.withColumn("__shard", band_shard), f"{index_path}/bands", "__shard"
+        )
+        state_table.append(
+            batch_sh.withColumn("__shard", shard("id")), f"{index_path}/shingles", "__shard"
+        )
 
     return once(f"{index_path}/_last_epoch", ingest)
 
@@ -199,7 +168,7 @@ def dedup_index_stream(
 
 def read_dup_pairs(spark, index_path: str) -> DataFrame:
     """All verified near-dup pairs discovered so far (d1 < d2)."""
-    pairs = _read_or_none(spark, f"{index_path}/pairs")
+    pairs = state_table.read(spark, f"{index_path}/pairs", None)
     if pairs is None:
         return spark.createDataFrame([], "d1 bigint, d2 bigint, jaccard double")
     return pairs.select("d1", "d2", "jaccard").distinct()

@@ -19,7 +19,8 @@ the table's size. The contract:
   directory behind and the deleted rows would resurrect. ``write``
   observes the partitions it emitted (an ``Observation`` that rides the
   write — no extra job) and deletes ``dirty - present``.
-- **Schema sidecar.** ``write`` records the output schema in ``_schema``
+- **Schema sidecar.** ``write`` (and ``append``, which the append-only
+  tables of the dedup index use) records the output schema in ``_schema``
   (underscore-prefixed, so Spark's listing ignores it) BEFORE the data, so
   every table it created has one and the sidecar covers every data file:
   a merger's schema only grows, so it is what ``mergeSchema`` would infer,
@@ -101,9 +102,22 @@ def write(df: DataFrame, path: str, dirty: Iterable, col: str = "__bucket") -> s
     return present
 
 
-def read(spark: SparkSession, path: str, col: str = "__bucket") -> DataFrame | None:
+def append(df: DataFrame, path: str, col: str | None = None) -> None:
+    """Append ``df`` to the table at ``path`` (Hive-partitioned by ``col``
+    if given), recording the ``_schema`` sidecar first, so that ``read``
+    needs no footer-inference job. For append-only tables whose schema
+    does not change between appends."""
+    write_text_marker(df.sparkSession, f"{path}/_schema", df.schema.json())
+    writer = df.write.mode("append")
+    (writer.partitionBy(col) if col else writer).parquet(path)
+
+
+def read(
+    spark: SparkSession, path: str, col: str | None = "__bucket"
+) -> DataFrame | None:
     """The state table at ``path``, or None if nothing was ever written
-    there (a filesystem check; no Spark read of an absent path)."""
+    there (a filesystem check; no Spark read of an absent path). ``col``
+    is the partition column the sidecar must hold (None: unpartitioned)."""
     fs, root, _ = _fs(spark, path)
     if not fs.exists(root):
         return None
@@ -112,6 +126,6 @@ def read(spark: SparkSession, path: str, col: str = "__bucket") -> DataFrame | N
         schema = StructType.fromJson(json.loads(sidecar)) if sidecar else None
     except (ValueError, KeyError, TypeError):  # not a schema: torn or foreign
         schema = None
-    if schema is None or col not in schema.fieldNames():
+    if schema is None or (col and col not in schema.fieldNames()):
         return spark.read.option("mergeSchema", "true").parquet(path)
     return spark.read.schema(schema).parquet(path)

@@ -150,3 +150,35 @@ def test_out_of_order_arrival_still_flags_the_larger_id(spark, tmp_path):
     ingest(d_small, epoch_id=2)
     flags = {(r["doc_id"], r["dup_of"]) for r in read_dup_flags(spark, path).collect()}
     assert flags == {(10, 2)}
+
+
+def test_index_reads_start_no_footer_inference_job(spark, sf_dir, tmp_path, monkeypatch):
+    """Every index table carries the ``_schema`` sidecar, so opening it
+    builds a DataFrame from the listing alone: the reads of a second epoch
+    (stored bands and shingles) and of ``read_dup_pairs`` start no Parquet
+    footer-inference job."""
+    from split_kinesis_streams_with_glue_spark.streaming import state_table
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    path = str(tmp_path / "idx")
+    ingest = make_dedup_indexer(path, threshold=0.5)
+    ingest(docs.filter(F.col("doc_id") % 2 == 0), epoch_id=1)
+
+    sc = spark.sparkContext
+    group = "dedup-index-reads"
+    read, tables = state_table.read, []
+
+    def read_in_group(spark, table, col="__bucket"):
+        sc.setJobGroup(group, "dedup index table read")
+        try:
+            tables.append(table.rsplit("/", 1)[-1])
+            return read(spark, table, col)
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+
+    monkeypatch.setattr(state_table, "read", read_in_group)
+    ingest(docs.filter(F.col("doc_id") % 2 == 1), epoch_id=2)
+    pairs = read_dup_pairs(spark, path)
+    assert tables == ["bands", "shingles", "pairs"]
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert pairs.count() > 0

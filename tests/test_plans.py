@@ -320,39 +320,73 @@ def test_sort_within_partitions_adds_no_exchange(spark, sf_dir):
     assert "Sort [l_shipdate" in plan and "], false, 0" in plan
 
 
-def test_minhash_signature_aggregate_is_codegened(spark, sf_dir):
-    """The 129-field MinHash signature HashAggregate must run inside
-    whole-stage codegen. With the stock ``spark.sql.codegen.maxFields=100``
-    both its partial and final aggregates silently fall back to INTERPRETED
-    expression evaluation — measured ~4 s vs ~0.7 s stage floor at sf0.1
-    (r14). The session pins maxFields=160; this test executes the aggregate
-    and asserts the final AQE plan carries the ``*(n)`` codegen marker on
-    the HashAggregate nodes, so a conf or width regression is caught here
-    rather than as a silent 3x slowdown."""
+def _aggregates_by_codegen(df, marker: str) -> tuple[list[str], list[str]]:
+    """Execute ``df``; return the final AQE plan's HashAggregate lines that
+    contain ``marker``, and those of them without the ``*(n)`` whole-stage
+    codegen marker."""
     import re
 
-    from split_kinesis_streams_with_glue_spark.operators.dedup import (
-        minhash_signatures,
-        shingle_sets,
-    )
-
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sigs = minhash_signatures(shingle_sets(d), 128)
-    sigs.collect()  # finalize the adaptive plan
-    final = sigs._jdf.queryExecution().executedPlan().toString()
+    df.collect()  # finalize the adaptive plan
+    final = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in final
     # the AQE toString appends the pre-execution "== Initial Plan ==",
     # which never carries codegen markers — inspect the final plan only
     final = final.split("== Initial Plan ==")[0]
-    agg_lines = [
-        ln for ln in final.splitlines() if "HashAggregate" in ln and "pmod" in ln
-    ]
-    assert agg_lines, "signature aggregate not found in executed plan"
-    uncodegened = [ln for ln in agg_lines if not re.search(r"\*\(\d+\) HashAggregate", ln)]
-    assert not uncodegened, (
-        "MinHash signature aggregate fell out of whole-stage codegen "
-        f"(interpreted min-fold, ~3x slower):\n" + "\n".join(uncodegened)
+    aggs = [ln for ln in final.splitlines() if "HashAggregate" in ln and marker in ln]
+    return aggs, [ln for ln in aggs if not re.search(r"\*\(\d+\) HashAggregate", ln)]
+
+
+def test_minhash_band_aggregate_is_codegened(spark, sf_dir):
+    """The MinHash band HashAggregate (``minhash_bands``: r min lanes per
+    (id, band)) must run inside whole-stage codegen: an operator that falls
+    out of it is evaluated INTERPRETED, which measured ~4 s vs ~0.7 s stage
+    floor at sf0.1 for the former 128-lane signature aggregate (r14). The
+    final AQE plan must carry the ``*(n)`` codegen marker on the
+    HashAggregate nodes, so a width or expression regression is caught
+    here rather than as a silent slowdown. The whole ``minhash_near_dups``
+    path must also stay free of lambda functions (interpreted per
+    element): every SQL execution it starts, the shingle pin included, is
+    checked for ``lambdafunction``."""
+    from split_kinesis_streams_with_glue_spark.operators.dedup import (
+        minhash_bands,
+        minhash_near_dups,
+        shingle_sets,
     )
+
+    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    aggs, interpreted = _aggregates_by_codegen(minhash_bands(shingle_sets(d)), "pmod")
+    assert aggs, "band aggregate not found in executed plan"
+    assert not interpreted, (
+        "MinHash band aggregate fell out of whole-stage codegen "
+        f"(interpreted min-fold, ~3x slower):\n" + "\n".join(interpreted)
+    )
+
+    # the store keeps only the newest spark.sql.ui.retainedExecutions, so
+    # select this call's executions by id, not by count
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest(k):
+        n = store.executionsCount()
+        runs = store.executionsList(max(n - k, 0), min(n, k))
+        return [runs.apply(i) for i in range(runs.size())]
+
+    last = max((e.executionId() for e in newest(1)), default=-1)
+    minhash_near_dups(d).collect()
+    plans = [e.physicalPlanDescription() for e in newest(100) if e.executionId() > last]
+    assert plans, "no SQL execution recorded for minhash_near_dups"
+    assert not [p for p in plans if "lambdafunction" in p]
+
+
+def test_wide_centroid_aggregate_is_codegened(spark, sf_dir):
+    """``sim_silhouette_simplified``'s per-label centroid mean over the
+    64-dim embeddings is a 129-field partial HashAggregate (label + 64
+    sum/count pairs), the widest registry aggregate under the session's
+    ``spark.sql.codegen.maxFields=160``. At Spark's default of 100 both its
+    aggregates run interpreted; this pins the conf."""
+    df = REGISTRY["sim_silhouette_simplified"].fn(spark, sf_dir)
+    aggs, interpreted = _aggregates_by_codegen(df, "embedding")
+    assert aggs, "centroid aggregate not found in executed plan"
+    assert not interpreted, "\n".join(ln[:200] for ln in interpreted)
 
 
 #: Every lint finding a registry query is ALLOWED to carry, with the reason.
@@ -829,7 +863,7 @@ _EXECUTED_SCAN_CEILINGS: dict[str, int] = {
     "sample_raking_ipf": 1,  # IPF scaling loop (r9 defect class)
     "sim_pca_power_iteration": 1,  # power-iteration loop (r10 defect class)
     "dedup_pagerank_centrality": 1,  # pagerank rounds (graph.py eager pins)
-    "dedup_minhash_lsh": 1,  # shingle/signature frames (eager pins)
+    "dedup_minhash_lsh": 1,  # shingle-array frame (eager pin)
     "sample_systematic_interval": 1,  # global_rank two-pass consumer
     "sample_quantile_normalize": 4,  # global_rank + INTEGER index mapping
     "dedup_semantic": 4,  # kmeans Lloyd loop (r11 defect, pinned)
