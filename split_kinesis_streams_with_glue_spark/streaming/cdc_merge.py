@@ -69,6 +69,20 @@ from split_kinesis_streams_with_glue_spark.streaming.markers import once, start
 META_COLS = ("timestamp", "operation", "__bucket")
 
 
+def _bucketed_delta(
+    env_batch: DataFrame, table: str, bucket_cols: list[str], num_buckets: int
+) -> DataFrame:
+    """The batch's change rows of ``table`` with their event time and their
+    key-hash ``__bucket`` of ``bucket_cols``."""
+    # prune=False: batch-local all-null column pruning would make the
+    # stored schema depend on which batch wrote first
+    rows = event_time(split_one(env_batch, table, keep_operation=True, prune=False))
+    return rows.withColumn(
+        "__bucket",
+        F.pmod(F.xxhash64(*[F.col(c) for c in bucket_cols]), F.lit(num_buckets)),
+    )
+
+
 def make_cdc_merger(
     path: str,
     table: str,
@@ -89,7 +103,7 @@ def make_cdc_merger(
     pks and of foreign keys in practice): if an update could move a row
     between buckets, its old version would be stranded in the old bucket.
 
-    ``on_merged(merged, dirty_ids, surviving)`` runs after the row table is
+    ``on_merged(merged, dirty_ids)`` runs after the row table is
     written but BEFORE the epoch marker commits — derived state (e.g. the
     partial-aggregate table of ``make_cdc_rollup_merger``) therefore shares
     the merge's replay contract: a crash between the two re-runs one epoch,
@@ -104,25 +118,9 @@ def make_cdc_merger(
 
     def merge(env_batch: DataFrame, epoch_id: int, last) -> None:
         spark = env_batch.sparkSession
-        # prune=False: batch-local all-null column pruning would make the
-        # stored schema depend on which batch wrote first
-        rows = event_time(
-            split_one(env_batch, table, keep_operation=True, prune=False)
-        )
-        delta = rows.withColumn(
-            "__bucket",
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in (bucket_cols or pk_cols)]),
-                F.lit(num_buckets),
-            ),
-        )
-        # None only when nothing was ever written at path: the first batch.
-        # Any other read failure (e.g. incompatible type drift across
-        # bucket files) propagates and fails the batch so the stream
-        # retries — treating it as pool = delta would dynamic-overwrite
-        # every dirty bucket with the delta alone, dropping stored rows.
-        stored = state_table.read(spark, path)
-        if stored is not None and compat_policy is not None:
+        delta = _bucketed_delta(env_batch, table, bucket_cols or pk_cols, num_buckets)
+        stored = state_table.read(spark, path) if compat_policy is not None else None
+        if stored is not None:
             from split_kinesis_streams_with_glue_spark.schema.compat import (
                 compatibility,
             )
@@ -140,42 +138,23 @@ def make_cdc_merger(
                     f"policy {sorted(compat_policy)} for table {table!r} "
                     f"(epoch {epoch_id}); batch failed before any write"
                 )
-        # Pin the batch once: the merge pool consumes delta, and unpinned,
-        # the batch source would be evaluated (and on the streaming path,
-        # its files re-read) again. The pin's own job also yields the
-        # dirty-bucket census (metadata-sized: <= num_buckets values),
-        # which drives the stored-side scan, the emptied-bucket sweep and
-        # on_merged. Pinned AFTER the compat_policy gate, which needs only
-        # delta.schema (no job), so a rejected batch pays no
-        # materialization on each retry.
-        delta, dirty_ids = state_table.pin(delta)
-        if stored is None:
-            pool = delta
-        else:
-            # only buckets this batch touches participate; untouched
-            # partitions stay on disk as-is (dynamic overwrite). isin over
-            # the partition column beats a broadcast join here: __bucket is
-            # the Hive partition key, so the predicate prunes the listed
-            # partitions before the scan, which never opens the files of
-            # untouched buckets.
-            # allowMissingColumns: a column added (or dropped) mid-stream
-            # null-fills on the side that lacks it instead of being dropped
-            pool = stored.filter(
-                F.col("__bucket").isin(list(dirty_ids))
-            ).unionByName(delta, allowMissingColumns=True)
-        # The parquet write IS the materialization of the merge: on_merged
-        # reads the written dirty buckets back instead of paying a
-        # localCheckpoint of the whole merged pool per epoch.
-        merged = compact(pool, pk_cols, drop_meta=False, keep_deletes=out_of_order)
-        surviving = state_table.write(merged, path, dirty_ids)
+        # the gate needs only delta.schema (no job) and runs before the
+        # merge pins the batch: a rejected batch pays no materialization
+        dirty = state_table.merge(
+            delta,
+            path,
+            lambda pool: compact(
+                pool, pk_cols, drop_meta=False, keep_deletes=out_of_order
+            ),
+        )
         if on_merged is not None:
-            # partition-pruned, column-prunable read-back of exactly the
-            # dirty buckets just written; the sidecar keeps the __bucket
-            # partition column at its written type
+            # the write IS the merge's materialization: the hook gets a
+            # partition-pruned read-back of the dirty buckets just written,
+            # not a localCheckpoint of the merged pool
             back = state_table.read(spark, path).filter(
-                F.col("__bucket").isin(list(dirty_ids))
+                F.col("__bucket").isin(list(dirty))
             )
-            on_merged(back, dirty_ids, surviving)
+            on_merged(back, dirty)
 
     return once(f"{path}/_last_epoch", merge)
 
@@ -243,7 +222,7 @@ def make_cdc_rollup_merger(
     any associative aggregate (count/sum here — pass a DECIMAL
     ``value_expr`` for engine-exact money sums)."""
 
-    def on_merged(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
+    def on_merged(merged: DataFrame, dirty_ids: set) -> None:
         partials = merged.groupBy("__bucket", *group_cols).agg(
             F.count(F.lit(1)).alias("n"), F.sum(value_expr).alias("total")
         )
@@ -322,7 +301,7 @@ def make_fingerprinted_merger(
     with no full-table scan ever."""
     from split_kinesis_streams_with_glue_spark.operators.diff import row_hash_expr
 
-    def on_merged(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
+    def on_merged(merged: DataFrame, dirty_ids: set) -> None:
         live = merged.filter(F.col("operation") != "delete")  # skip tombstones
         fp = (
             live.select("__bucket", row_hash_expr(repr_cols).alias("__h"))
@@ -375,27 +354,15 @@ def make_scd2_merger(
 
     def merge(env_batch: DataFrame, epoch_id: int, last) -> None:
         spark = env_batch.sparkSession
-        delta = event_time(
-            split_one(env_batch, table, keep_operation=True, prune=False)
-        ).withColumn(
-            "__bucket",
-            F.pmod(F.xxhash64(*[F.col(c) for c in pk_cols]), F.lit(num_buckets)),
-        )
-        # pin once, taking the dirty census from the pin's own job: on the
-        # streaming path an unpinned batch source is read again by the pool
-        delta, dirty = state_table.pin(delta)
-        stored = state_table.read(spark, log_path)  # None: the first batch
-        if stored is None:
-            pool = delta
-        else:
-            pool = stored.filter(F.col("__bucket").isin(list(dirty))).unionByName(
-                delta, allowMissingColumns=True
-            )
         # exact-duplicate drop = replay idempotence for the append-ish log.
         # The log write IS the pool's materialization (write-first, as in
         # make_cdc_merger): the SCD2 recompute reads the written dirty
         # buckets back instead of a localCheckpoint of the whole pool.
-        state_table.write(pool.distinct(), log_path, dirty)
+        dirty = state_table.merge(
+            _bucketed_delta(env_batch, table, pk_cols, num_buckets),
+            log_path,
+            DataFrame.distinct,
+        )
         log_back = state_table.read(spark, log_path).filter(
             F.col("__bucket").isin(list(dirty))
         )

@@ -41,20 +41,27 @@ from pyspark.sql import functions as F
 
 from split_kinesis_streams_with_glue_spark.streaming import state_table
 from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
+    _stored,
     make_cdc_merger,
     read_rollup,
 )
-from split_kinesis_streams_with_glue_spark.streaming.markers import start
+from split_kinesis_streams_with_glue_spark.streaming.markers import _fs, start
 
 
 def bucket_copy(df: DataFrame, key_col: str, path: str, num_buckets: int) -> None:
     """One-time preparation of the fact side: write ``df`` Hive-partitioned
     by the merger's key-hash bucket of ``key_col``. At 100 TB this is the
     usual one-off layout job (and the same bucketed layout serves every
-    view keyed on this column)."""
-    df.withColumn(
+    view keyed on this column). A re-copy replaces the whole table; the
+    ``_schema`` sidecar the write records lets every epoch's fact read skip
+    the footer-inference job."""
+    fs, root, _ = _fs(df.sparkSession, path)
+    if fs.exists(root):
+        fs.delete(root, True)
+    bucketed = df.withColumn(
         "__bucket", F.pmod(F.xxhash64(F.col(key_col)), F.lit(num_buckets))
-    ).write.mode("overwrite").partitionBy("__bucket").parquet(path)
+    )
+    state_table.write(bucketed, path, ())
 
 
 def make_cdc_join_view_merger(
@@ -85,13 +92,13 @@ def make_cdc_join_view_merger(
     ``dim_key`` and ``fact_key`` must have identical types on both sides
     (cast before ``bucket_copy`` if they differ)."""
 
-    def on_merged(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
+    def on_merged(merged: DataFrame, dirty_ids: set) -> None:
         spark = merged.sparkSession
         dirty = [int(b) for b in dirty_ids]
         dim = merged.filter(F.col("operation") != "delete").withColumnRenamed(
             "__bucket", "__dim_bucket"
         )
-        facts = spark.read.parquet(fact_path).filter(F.col("__bucket").isin(dirty))
+        facts = _stored(spark, fact_path).filter(F.col("__bucket").isin(dirty))
         # alias both sides: with unaliased frames a shared key name (the
         # common case — e.g. customer_id on both tables) makes
         # F.col(dim_key) ambiguous and the merge raises AnalysisException
@@ -184,7 +191,7 @@ def make_symmetric_join_view_mergers(
         )
         state_table.write(partials, agg_path, dirty)
 
-    def hook(merged: DataFrame, dirty_ids: set, surviving: set) -> None:
+    def hook(merged: DataFrame, dirty_ids: set) -> None:
         update_view(merged.sparkSession, dirty_ids)
 
     left_merge = make_cdc_merger(

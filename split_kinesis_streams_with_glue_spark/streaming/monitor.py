@@ -1,5 +1,5 @@
 """Drift monitoring at ingest: per-micro-batch PSI against a frozen
-reference, appended to a metrics table.
+reference, recorded in a metrics table.
 
 The batch-mode ``psi_drift`` (operators/quality_checks.py) answers "did
 the corpus drift between snapshots"; this wires the same statistic into
@@ -9,12 +9,16 @@ the trigger that introduced it, not at the next snapshot audit.
 
 State shape: the reference's bin counts are computed ONCE and broadcast
 (bounded: n_bins + 2 rows); each trigger bins only its own batch and
-appends one (epoch, psi, drifted) row to the metrics side-channel. O(batch)
-per trigger, metrics table grows one row per trigger.
+writes one (psi, drifted) row to the metrics side-channel's ``epoch=N``
+partition. O(batch) per trigger, metrics table grows one row per trigger.
 
 Replay: every monitor runs under the replay contract of
 ``streaming/markers.py`` (``once``): a ``_last_epoch`` marker under the
 metrics path skips committed epochs and commits after the epoch's writes.
+Every monitor writes its row to the ``epoch=N`` partition of the metrics
+table, overwritten (never appended) on replay, so a crash between that
+write and the marker duplicates no row; ``read_psi_metrics`` reads
+``epoch`` back from the partition directories.
 The stateful monitors (novelty, EWMA) keep their state in versioned slots
 (``slot(state_path, epoch)``), so a crash anywhere inside an epoch replays
 against the unchanged committed state.
@@ -76,10 +80,13 @@ def make_psi_monitor(
             p = max(ref_counts.get(b, 0) / ref_total, eps) if ref_total else eps
             q = max(cur_counts.get(b, 0) / cur_total, eps) if cur_total else eps
             psi += (p - q) * math.log(p / q)
-        row = [(int(epoch_id), round(psi, 6), psi > threshold, cur_total)]
+        # one epoch=N partition, overwritten on replay like the other
+        # monitors' rows: a crash between this write and the marker
+        # duplicates nothing
         batch_df.sparkSession.createDataFrame(
-            row, "epoch int, psi double, drifted boolean, n_rows bigint"
-        ).write.mode("append").parquet(metrics_path)
+            [(round(psi, 6), psi > threshold, cur_total)],
+            "psi double, drifted boolean, n_rows bigint",
+        ).write.mode("overwrite").parquet(f"{metrics_path}/epoch={int(epoch_id)}")
 
     return once(f"{metrics_path}/_last_epoch", monitor)
 

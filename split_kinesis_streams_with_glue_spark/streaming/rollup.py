@@ -4,8 +4,10 @@ stream arrives.
 
 Per micro-batch: partial-aggregate the batch by (bucket, keys), merge with
 the stored aggregate rows OF THE TOUCHED BUCKETS ONLY, and rewrite exactly
-those bucket partitions — the bucketed state-table layout of
-``streaming/state_table.py``, partitioned on ``bucket``. At scale the
+those bucket partitions — one ``state_table.merge`` epoch over the
+bucketed state-table layout of ``streaming/state_table.py``, partitioned
+on ``bucket``. The touched-bucket census comes from the pin of the batch's
+partial aggregate, in the pin's own job. At scale the
 cost per trigger is O(batch + dirty-bucket rows), independent of the total
 history size — the property that makes a rollup usable on an unbounded
 stream. Counts and sums merge associatively, so partial agg + merge is
@@ -45,30 +47,19 @@ def make_merger(
     keys = keys or ["event_type"]
 
     def merge(batch: DataFrame, epoch_id: int, last) -> None:
-        spark = batch.sparkSession
         delta = batch.groupBy(bucket.alias("bucket"), *keys).agg(
             F.count(F.lit(1)).alias("n"), F.sum(value_col).alias("total")
         )
-        # None only when nothing was ever written at path: the first batch.
-        # Any other read failure (transient IO, corrupt file) fails the
-        # batch so the stream retries — a delta-only fallback would
-        # dynamic-overwrite touched buckets with the delta alone, silently
-        # discarding their accumulated history.
-        old = state_table.read(spark, path, "bucket")
-        if old is None:
-            merged = delta
-        else:
-            # only the buckets this batch touches participate in the merge;
-            # untouched partitions are left on disk as-is (dynamic overwrite)
-            dirty = delta.select("bucket").distinct()
-            merged = (
-                old.join(F.broadcast(dirty), "bucket")
-                .unionByName(delta)
-                .groupBy("bucket", *keys)
-                .agg(F.sum("n").alias("n"), F.sum("total").alias("total"))
-            )
-        # counts only grow, so no touched bucket ever empties: nothing to sweep
-        state_table.write(merged, path, set(), "bucket")
+        # every dirty bucket is in the re-aggregate (counts only grow), so
+        # the write's sweep deletes nothing
+        state_table.merge(
+            delta,
+            path,
+            lambda pool: pool.groupBy("bucket", *keys).agg(
+                F.sum("n").alias("n"), F.sum("total").alias("total")
+            ),
+            "bucket",
+        )
 
     return once(f"{path}/_last_epoch", merge)
 

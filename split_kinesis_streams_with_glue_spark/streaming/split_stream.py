@@ -186,18 +186,6 @@ def run_split_stream_to_completion(spark, **kwargs) -> None:
     q.awaitTermination()
 
 
-def stream_dedup(
-    env_stream: DataFrame,
-    pk_cols: list[str],
-    ts_col: str = "event_ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup on primary key within a watermark horizon —
-    the streaming form of CDC compaction's first stage (T7). State is
-    bounded: keys older than the watermark are evicted."""
-    return env_stream.withWatermark(ts_col, watermark).dropDuplicates(pk_cols)
-
-
 def windowed_event_counts(
     events: DataFrame,
     window: str = "1 hour",
@@ -206,20 +194,8 @@ def windowed_event_counts(
 ) -> DataFrame:
     """Event-time tumbling-window counts with late-data tolerance (T6) —
     works identically on a batch frame (window without watermark) and a
-    stream."""
-    base = (
-        events.withWatermark(ts_col, watermark) if events.isStreaming else events
-    )
-    return (
-        base.groupBy(F.window(F.col(ts_col), window).alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-        )
-    )
+    stream. A tumbling window is a hopping one whose slide is its width."""
+    return hopping_event_counts(events, window, window, ts_col, watermark)
 
 
 def hopping_event_counts(

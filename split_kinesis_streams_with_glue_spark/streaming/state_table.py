@@ -12,8 +12,8 @@ the table's size. The contract:
   in its output with the per-write ``partitionOverwriteMode=dynamic``
   option; partitions it does not emit stay on disk untouched. The option
   is per write, never a session conf: a session-wide ``dynamic`` would
-  turn every later full ``overwrite`` in the same session (a one-off
-  ``bucket_copy``, a publish) into a partial one.
+  turn every later full ``overwrite`` in the same session (a publish)
+  into a partial one.
 - **Emptied-partition sweep.** A dirty partition whose rows were all
   deleted emits nothing, so dynamic overwrite would leave its stale
   directory behind and the deleted rows would resurrect. ``write``
@@ -42,6 +42,15 @@ the table's size. The contract:
   (``localCheckpoint``) and returns the set of partition values it holds,
   from an ``Observation`` that rides the checkpoint's own job: the dirty
   census costs no job of its own.
+- **One epoch.** ``merge`` is the whole dirty-partition epoch every
+  merger runs: pin the batch's delta (census from the pin), read the
+  stored table, keep only its dirty partitions, union the delta in
+  (``allowMissingColumns``: a column added or dropped mid-stream
+  null-fills on the side that lacks it), and ``write`` the merger's
+  ``combine`` of that pool over the dirty partitions, sweep included.
+  The CDC, SCD2 and rollup mergers differ only in ``combine``. The first
+  batch (no stored table yet) skips the pin: it writes ``combine(delta)``
+  in one pass, and the partitions written are its dirty set.
 - **The partition column is immutable per key.** An update that moved a
   key to another partition would strand its old version in the old one,
   which no epoch dirties again. Key-hash buckets of a primary or foreign
@@ -51,7 +60,7 @@ the table's size. The contract:
 from __future__ import annotations
 
 import json
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -100,6 +109,35 @@ def write(df: DataFrame, path: str, dirty: Iterable, col: str = "__bucket") -> s
         fs, part, _ = _fs(spark, f"{path}/{col}={value}")
         fs.delete(part, True)
     return present
+
+
+def merge(
+    delta: DataFrame,
+    path: str,
+    combine: Callable[[DataFrame], DataFrame],
+    col: str = "__bucket",
+) -> set:
+    """One dirty-partition epoch: pin ``delta`` (its census is the dirty
+    set), pool the stored rows of the dirty ``col`` partitions with it, and
+    ``write`` ``combine(pool)`` over exactly those partitions. Returns the
+    dirty set. The pin keeps the batch source from being evaluated twice,
+    and ``isin`` on the partition column prunes the listed partitions, so
+    the scan never opens an untouched partition's files."""
+    # None only when nothing was ever written at path: the first batch. Any
+    # other read failure propagates and fails the batch, so the stream
+    # retries: treating it as pool = delta would overwrite every dirty
+    # partition with the delta alone, dropping the stored rows.
+    stored = read(delta.sparkSession, path, col)
+    if stored is None:
+        # delta is read once and there is nothing to sweep: no pin, and the
+        # partitions written stand in for the census
+        return write(combine(delta), path, (), col)
+    delta, dirty = pin(delta, col)
+    pool = stored.filter(F.col(col).isin(list(dirty))).unionByName(
+        delta, allowMissingColumns=True
+    )
+    write(combine(pool), path, dirty, col)
+    return dirty
 
 
 def append(df: DataFrame, path: str, col: str | None = None) -> None:

@@ -365,9 +365,9 @@ def test_symmetric_join_view_shared_key_name(spark, sf_dir, tmp_path):
 
 def test_merger_epoch_leaves_session_overwrite_mode_alone(spark, tmp_path):
     """Merger epochs overwrite their dirty buckets with a per-write option,
-    never by switching the session to dynamic partition overwrite: a later
-    full overwrite in the same session (``bucket_copy`` re-run over fewer
-    keys) must still replace every old bucket directory."""
+    never by switching the session to dynamic partition overwrite, and a
+    later ``bucket_copy`` re-run over fewer keys in the same session still
+    replaces every old bucket directory."""
     from split_kinesis_streams_with_glue_spark.envelope import wrap
     from split_kinesis_streams_with_glue_spark.streaming.cdc_merge import (
         make_cdc_merger,
@@ -386,3 +386,31 @@ def test_merger_epoch_leaves_session_overwrite_mode_alone(spark, tmp_path):
     buckets = [d for d in os.listdir(facts) if d.startswith("__bucket=")]
     assert len(buckets) == 1, f"stale buckets survived the overwrite: {buckets}"
     assert spark.conf.get(mode_key) == mode_before
+
+
+def test_fact_read_starts_no_footer_inference_job(spark, sf_dir, tmp_path, monkeypatch):
+    """``bucket_copy`` records the ``_schema`` sidecar, so the hook's fact
+    read in a later epoch builds its DataFrame from the listing alone and
+    starts no Parquet footer-inference job."""
+    from split_kinesis_streams_with_glue_spark.streaming import state_table
+
+    env, _, merge = _setup(spark, sf_dir, tmp_path)
+    op = F.col("metadata.operation")
+    merge(env.filter(op == "load"), 0)
+
+    sc = spark.sparkContext
+    group = "join-view-fact-read"
+    read, tables = state_table.read, []
+
+    def read_in_group(spark, path, col="__bucket"):
+        sc.setJobGroup(group, "join view state read")
+        try:
+            tables.append(path.rsplit("/", 1)[-1])
+            return read(spark, path, col)
+        finally:
+            sc.setJobGroup(f"{group}-done", "")
+
+    monkeypatch.setattr(state_table, "read", read_in_group)
+    merge(env.filter(op == "update"), 1)
+    assert "facts" in tables
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

@@ -130,7 +130,7 @@ def test_pin_census_equals_the_distinct_buckets(spark, sf_dir, tmp_path):
         "customer",
         ["c_custkey"],
         num_buckets=64,
-        on_merged=lambda merged, dirty, surviving: seen.append(dirty),
+        on_merged=lambda merged, dirty: seen.append(dirty),
     )
     merge(env.filter(op == "load"), 0)
     update = env.filter(op == "update")
@@ -153,5 +153,20 @@ def test_no_distinct_collect_census_in_streaming():
         f"{path.relative_to(REPO)}: {m.group(0)!r}"
         for path in sorted(STREAMING.rglob("*.py"))
         for m in re.finditer(r"\.distinct\(\)\s*\.collect\(\)", path.read_text())
+    ]
+    assert offenders == []
+
+
+def test_no_hand_written_epoch_outside_state_table():
+    """The dirty-partition epoch (pin, stored read, prune, union, write) is
+    ``state_table.merge``; no other streaming module pools a delta into its
+    stored rows or joins them against a broadcast dirty set by hand."""
+    offenders = [
+        f"{path.relative_to(REPO)}: {m.group(0)!r}"
+        for path in sorted(STREAMING.rglob("*.py"))
+        if path.name != "state_table.py"
+        for m in re.finditer(
+            r"unionByName\(\s*delta|F\.broadcast\(dirty\)", path.read_text()
+        )
     ]
     assert offenders == []

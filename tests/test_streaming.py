@@ -1,7 +1,9 @@
 """M4: Structured Streaming splitter — micro-batch fan-out, checkpoint
-restart idempotence, DLQ routing, watermarked dedup, windowed counts."""
+restart idempotence, DLQ routing, windowed counts."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,7 +17,6 @@ from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
 )
 from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
     run_split_stream_to_completion,
-    stream_dedup,
     windowed_event_counts,
 )
 
@@ -222,38 +223,6 @@ def test_once_skips_committed_epochs_and_commits_last(spark, tmp_path):
     assert calls[-2:] == [(2, 1), (2, 1)]
     assert read_marker(spark, marker) == 2
     assert sorted(d for d in os.listdir(root) if d.startswith("__v=")) == ["__v=2"]
-
-
-def test_stream_dedup_with_watermark(spark, sf_dir, tmp_path):
-    """Watermarked dropDuplicates on a real stream: duplicated keys across
-    micro-batches within the horizon collapse to one."""
-    src = str(tmp_path / "dups_src")
-    from split_kinesis_streams_with_glue_spark.plans.registry import load
-
-    # registry load normalizes ts across fixture vintages (ns-as-bigint vs us)
-    ev = load(spark, sf_dir, "events").withColumnRenamed("ts", "event_ts")
-    doubled = ev.unionByName(ev)  # every event twice
-    doubled.coalesce(2).write.mode("overwrite").json(src)
-
-    stream = spark.readStream.schema(spark.read.json(src).schema).option(
-        "maxFilesPerTrigger", "1"
-    ).json(src)
-    deduped = stream_dedup(
-        stream.withColumn("event_ts", F.col("event_ts").cast("timestamp")),
-        ["event_id"],
-        ts_col="event_ts",
-        watermark="1 day",
-    )
-    out = str(tmp_path / "dedup_out")
-    q = (
-        deduped.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(out).count() == ev.count()
 
 
 def test_windowed_event_counts_batch_stream_parity(spark, sf_dir, tmp_path):
@@ -528,6 +497,24 @@ def test_psi_monitor_empty_batch_and_replay(spark, sf_dir, tmp_path):
     assert set(rows) == {0, 1}
     assert rows[0]["n_rows"] == 0 and rows[0]["drifted"]
     assert rows[1]["psi"] == 0.0 and not rows[1]["drifted"]
+
+
+def test_psi_monitor_replay_after_lost_marker_writes_one_row(spark, sf_dir, tmp_path):
+    """A crash between the metrics write and the marker replays the epoch:
+    its row is overwritten, not appended a second time."""
+    from split_kinesis_streams_with_glue_spark.streaming.monitor import (
+        make_psi_monitor,
+        read_psi_metrics,
+    )
+
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    path = str(tmp_path / "metrics")
+    monitor = make_psi_monitor(cust, "c_acctbal", -1000.0, 10000.0, path)
+    monitor(cust, 0)
+    os.remove(f"{path}/_last_epoch")
+    monitor(cust, 0)
+    rows = read_psi_metrics(spark, path).collect()
+    assert [(r["epoch"], r["psi"]) for r in rows] == [(0, 0.0)]
 
 
 def test_novelty_monitor_counts_replays_and_partial_failure(
