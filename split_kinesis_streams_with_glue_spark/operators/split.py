@@ -29,12 +29,17 @@ from split_kinesis_streams_with_glue_spark.envelope import SCHEMA_NAME, meta_col
 
 
 def table_filter(
-    table_name: str, schema_name: str = SCHEMA_NAME, drop_control: bool = True
+    table_name: str | list[str],
+    schema_name: str = SCHEMA_NAME,
+    drop_control: bool = True,
 ):
     """P1 — the reference's record-selection predicate as a Column expr
     (reference README.md:259-263: schema-name == ..., table-name == ...,
-    data is not null)."""
-    cond = (meta_col("schema-name") == schema_name) & (meta_col("table-name") == table_name)
+    data is not null). A list of names selects the records of any of them."""
+    name = meta_col("table-name")
+    cond = (meta_col("schema-name") == schema_name) & (
+        name.isin(table_name) if isinstance(table_name, list) else name == table_name
+    )
     if drop_control:
         cond = cond & F.col("data").isNotNull() & (meta_col("record-type") == "data")
     return cond

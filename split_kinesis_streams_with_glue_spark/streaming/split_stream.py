@@ -6,29 +6,44 @@ Design (SURVEY.md §3.2 engine equivalents):
 - **Source**: file-source micro-batches over envelope JSON (the local,
   testable stand-in for the Kinesis connector — see ``sources.kinesis``);
   explicit schema; PERMISSIVE corrupt-record capture.
-- **foreachBatch fan-out**: one pass per micro-batch; within the batch the
-  envelope frame is persisted once and every table's filter+flatten+append
-  runs against it, plus the DLQ append — the multi-sink idiom Structured
-  Streaming supports.
-- **Idempotence**: foreachBatch is at-least-once — after a crash the same
-  batch id is re-delivered, and manual appends carry none of the built-in
-  file sink's commit-log protection. Each output directory (every table,
-  the DLQ, the metrics) is therefore appended through its own
-  ``_last_batch`` marker under the replay contract of
-  ``streaming/markers.py`` (``once``: skip committed batches, commit the
-  marker last); a replayed batch skips every output whose marker already
-  covers it. The remaining exposure is a crash between ONE output's append
-  and its marker write — that single table can duplicate one batch on
-  replay. Closing that last window needs an ACID table format
-  (Iceberg/Delta) or batch-keyed subdirectories; append-only parquet
-  cannot do better (verified by the restart and replay tests).
+- **foreachBatch fan-out**: one pass per micro-batch, whatever the number
+  of tables. The envelope frame is persisted once; the data records of
+  every listed table (``table_filter``) are tagged with their table name
+  and written by ONE job, Hive-partitioned by that tag; the DLQ rows (and
+  the per-batch metrics) are one more write each. Every table receives the
+  union ``data.*`` columns (plus ``timestamp``), as ``split_one(...,
+  prune=False)`` would give it: the streaming schema is fixed by contract,
+  not re-derived per batch.
+- **Staged publish, one commit**: foreachBatch is at-least-once — after a
+  crash the same batch id is re-delivered, and manual appends carry none
+  of the built-in file sink's commit-log protection. So batch N's writes
+  go to a hidden staging dir, ``{out_dir}/_staging/bN``, which works as a
+  redo log: once every staged write has completed, a ``_staged`` flag is
+  created in it, and then each staged data file is renamed into its
+  table's dir (or the DLQ or metrics dir) under a batch-keyed name,
+  ``bN-part-...``. Only then does the one ``{out_dir}/{schema}/_last_batch``
+  marker commit the batch under the replay contract of
+  ``streaming/markers.py`` (``once``), and the staging dir is removed. A
+  replay of an uncommitted batch finds either no flag (nothing was
+  published: the stage is rewritten from scratch) or the flag (the stage
+  is complete: the files not yet moved are moved), so it ends with
+  exactly one copy of the batch's rows wherever the crash happened, and
+  no table dir is ever listed. The marker commits before the staging dir
+  goes: the other order would let a crash between the two re-stage and
+  re-publish the batch. A rename is a metadata move, so the DLQ and
+  metrics dirs must be on the same filesystem as ``out_dir``.
+- **Empty tables**: a listed table with no rows in a batch gets no file,
+  unless it has no dir yet; then it gets one schema-only file, so that it
+  reads as zero rows. The date layout writes none (a root-level file
+  beside ``ingest_date=`` dirs would break partition discovery).
 - **Triggers**: ``availableNow`` drains the backlog then stops (test mode);
   ``processingTime`` mirrors Firehose's 600 s buffering (reference
   README.md:78-81).
 
-Scale: per-batch work is the batch splitter (single pass, broadcastable
-filters); checkpoint state is file-source offsets only — no unbounded state.
-Stateful operators (dedup) bound their state with watermarks.
+Scale: per-batch work is one filtered write of the persisted batch plus
+the DLQ write, whatever the number of tables; checkpoint state is
+file-source offsets only — no unbounded state. Stateful operators (dedup)
+bound their state with watermarks.
 """
 
 from __future__ import annotations
@@ -37,18 +52,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from split_kinesis_streams_with_glue_spark.envelope import SCHEMA_NAME
+from split_kinesis_streams_with_glue_spark.envelope import SCHEMA_NAME, meta_col
 from split_kinesis_streams_with_glue_spark.operators.split import (
-    split_one,
     split_stats,
     table_filter,
 )
 from split_kinesis_streams_with_glue_spark.sources.json_envelope import (
-    CORRUPT_COL,
     corrupt_records,
     read_envelope_stream,
 )
-from split_kinesis_streams_with_glue_spark.streaming.markers import once
+from split_kinesis_streams_with_glue_spark.streaming.markers import _fs, once
+
+
+def _move(fs, src, dst) -> None:
+    """Rename the staged file ``src`` to ``dst`` (a Hadoop Path whose
+    parent dir exists)."""
+    if not fs.rename(src, dst):
+        raise IOError(f"publish rename failed: {src} -> {dst}")
 
 
 def make_batch_processor(
@@ -63,74 +83,116 @@ def make_batch_processor(
     """The (batch_df, batch_id) -> None fan-out used by
     ``start_split_stream`` — exposed so replay idempotence is directly
     testable without driving a full stream restart."""
+    staging = f"{out_dir}/_staging"
+    table_dirs = {t: f"{out_dir}/{schema_name}/{t}" for t in tables}
 
-    def append_table(t: str):
-        table_dir = f"{out_dir}/{schema_name}/{t}"
-
-        def step(batch_df: DataFrame, batch_id: int, last) -> None:
-            split = split_one(
-                batch_df,
-                t,
-                schema_name,
-                # date layout needs the event timestamp
-                keep_timestamp=keep_timestamp or partition_by_ingest_date,
-                prune=False,  # streaming: schema fixed by contract,
-                # not re-derived per batch (prune scans the batch)
-            )
-            writer = split.write.mode("append")
-            if partition_by_ingest_date:
-                # the Firehose !{timestamp:yyyy-MM-dd} prefix layout
-                # (reference README.md:76) as Hive partitioning —
-                # enables partition pruning on date-ranged queries
-                split = split.withColumn(
-                    "ingest_date", F.to_date(F.to_timestamp("timestamp"))
-                )
-                if not keep_timestamp:
-                    split = split.drop("timestamp")
-                writer = split.write.mode("append").partitionBy("ingest_date")
-            writer.parquet(table_dir)
-
-        return once(f"{table_dir}/_last_batch", step)
-
-    def append_dlq(batch_df: DataFrame, batch_id: int, last) -> None:
-        corrupt_records(batch_df).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").json(dlq_dir)
-
-    def append_metrics(batch_df: DataFrame, batch_id: int, last) -> None:
-        # live DMS-console view (image/image3.png): per-batch
-        # (schema, table, operation) counts plus a corrupt-row
-        # count — one tiny aggregate over the already-persisted
-        # batch, appended with the same replay guard as the data
-        m = split_stats(batch_df).unionByName(
-            corrupt_records(batch_df)
-            .agg(F.count(F.lit(1)).alias("n_records"))
-            .select(
-                F.lit(schema_name).alias("schema_name"),
-                F.lit("_corrupt").alias("table_name"),
-                F.lit("error").alias("operation"),
-                "n_records",
-            )
+    def stage(batch_df: DataFrame, batch_id: int, root: str, parts: dict) -> None:
+        """Write every output of the batch under ``root``: the tables as
+        the ``__table=`` partitions (``parts``: dir -> table dir) of one
+        write, the DLQ and the metrics as the ``dlq`` and ``metrics``
+        subdirs."""
+        cols = [F.col("data.*")]
+        if keep_timestamp or partition_by_ingest_date:  # the date needs it
+            cols.append(meta_col("timestamp").alias("timestamp"))
+        rows = batch_df.filter(table_filter(list(tables), schema_name)).select(
+            *cols, meta_col("table-name").alias("__table")
         )
-        m.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.mode(
-            "append"
-        ).parquet(metrics_dir)
+        partition_by = ["__table"]
+        if partition_by_ingest_date:
+            # the Firehose !{timestamp:yyyy-MM-dd} prefix layout
+            # (reference README.md:76) as Hive partitioning —
+            # enables partition pruning on date-ranged queries
+            rows = rows.withColumn(
+                "ingest_date", F.to_date(F.to_timestamp("timestamp"))
+            )
+            if not keep_timestamp:
+                rows = rows.drop("timestamp")
+            partition_by.append("ingest_date")
+        rows.write.partitionBy(*partition_by).parquet(root)
+        if not partition_by_ingest_date:
+            fs, p, jvm = _fs(batch_df.sparkSession, root)
+            staged = {st.getPath().getName() for st in fs.listStatus(p)}
+            for part, table_dir in parts.items():
+                if part not in staged and not fs.exists(
+                    jvm.org.apache.hadoop.fs.Path(table_dir)
+                ):
+                    # no rows and no dir yet: a schema-only file keeps the
+                    # table readable as zero rows
+                    rows.drop("__table").limit(0).write.parquet(f"{root}/{part}")
+        if dlq_dir is not None:
+            corrupt_records(batch_df).withColumn(
+                "batch_id", F.lit(batch_id)
+            ).write.json(f"{root}/dlq")
+        if metrics_dir is not None:
+            # live DMS-console view (image/image3.png): per-batch
+            # (schema, table, operation) counts plus a corrupt-row
+            # count — one tiny aggregate over the already-persisted batch
+            m = split_stats(batch_df).unionByName(
+                corrupt_records(batch_df)
+                .agg(F.count(F.lit(1)).alias("n_records"))
+                .select(
+                    F.lit(schema_name).alias("schema_name"),
+                    F.lit("_corrupt").alias("table_name"),
+                    F.lit("error").alias("operation"),
+                    "n_records",
+                )
+            )
+            m.withColumn("batch_id", F.lit(batch_id)).coalesce(1).write.parquet(
+                f"{root}/metrics"
+            )
 
-    # one guarded output per table, then the DLQ and the metrics: a
-    # replayed batch skips every output whose marker already covers it
-    outputs = [append_table(t) for t in tables]
-    if dlq_dir is not None:
-        outputs.append(once(f"{dlq_dir}/_last_batch", append_dlq))
-    if metrics_dir is not None:
-        outputs.append(once(f"{metrics_dir}/_last_batch", append_metrics))
+    def publish(spark, batch_id: int, root: str, routes: dict) -> None:
+        """Move every staged data file left under ``root`` into the dir
+        its top staging dir routes to, as ``b{batch_id}-{name}``, keeping
+        the dirs below it (``ingest_date=``)."""
+        fs, p, jvm = _fs(spark, root)
+        base = fs.makeQualified(p).toUri().getPath()
+        made = set()
+        files = fs.listFiles(p, True)
+        while files.hasNext():
+            src = files.next().getPath()
+            rel = src.toUri().getPath()[len(base) + 1 :].split("/")
+            if len(rel) < 2 or rel[0] not in routes or rel[-1].startswith(("_", ".")):
+                continue  # the flag, _SUCCESS files
+            top, *sub, name = rel
+            parent = "/".join([routes[top], *sub])
+            if parent not in made:
+                fs.mkdirs(jvm.org.apache.hadoop.fs.Path(parent))
+                made.add(parent)
+            dst = jvm.org.apache.hadoop.fs.Path(f"{parent}/b{batch_id}-{name}")
+            _move(fs, src, dst)
+
+    def fan_out(batch_df: DataFrame, batch_id: int, last) -> None:
+        spark = batch_df.sparkSession
+        root = f"{staging}/b{batch_id}"
+        escape = (
+            spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        ).escapePathName
+        # staged dir -> output dir; tables map back through the list,
+        # never by unescaping a dir name
+        parts = {f"__table={escape(t)}": d for t, d in table_dirs.items()}
+        fs, flag, jvm = _fs(spark, f"{root}/_staged")
+        if not fs.exists(flag):
+            # nothing of this batch is published yet: (re)write its stage,
+            # dropping whatever an interrupted attempt left
+            fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+            stage(batch_df, batch_id, root, parts)
+            fs.create(flag, True).close()
+        # an output left unset (None) has no staged dir
+        routes = {**parts, "dlq": dlq_dir, "metrics": metrics_dir}
+        publish(spark, batch_id, root, routes)
+
+    commit = once(f"{out_dir}/{schema_name}/_last_batch", fan_out)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            for output in outputs:
-                output(batch_df, batch_id)
+            commit(batch_df, batch_id)
         finally:
             batch_df.unpersist()
+        # committed, now or by an earlier run: the stage is spent
+        fs, p, _ = _fs(batch_df.sparkSession, staging)
+        fs.delete(p, True)
 
     return process_batch
 

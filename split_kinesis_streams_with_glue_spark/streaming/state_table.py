@@ -41,7 +41,10 @@ the table's size. The contract:
 - **Census from the pin.** ``pin`` materializes an epoch's batch once
   (``localCheckpoint``) and returns the set of partition values it holds,
   from an ``Observation`` that rides the checkpoint's own job: the dirty
-  census costs no job of its own.
+  census costs no job of its own. A null value (the
+  ``__HIVE_DEFAULT_PARTITION__`` dir, e.g. a rollup's null event time) is
+  in the census as None, so its partition is pooled and rewritten like
+  any other instead of being overwritten by the batch's rows alone.
 - **One epoch.** ``merge`` is the whole dirty-partition epoch every
   merger runs: pin the batch's delta (census from the pin), read the
   stored table, keep only its dirty partitions, union the delta in
@@ -73,19 +76,27 @@ from split_kinesis_streams_with_glue_spark.streaming.markers import (
 )
 
 
+def _census(c: str | Column, name: str) -> Column:
+    """The distinct values of ``c``, null included: ``collect_set`` drops
+    nulls, but not a struct holding one."""
+    return F.collect_set(F.struct(c)).alias(name)
+
+
+def _values(census: list) -> set:
+    return {row[0] for row in census}
+
+
 def pin(df: DataFrame, *cols: str | Column) -> tuple[DataFrame, set]:
     """Eagerly ``localCheckpoint`` ``df`` and return it with the set of
-    values that ``cols`` (default: ``__bucket``) take in it, observed by
-    the checkpoint's own job. Meant for metadata-sized censuses (bucket or
-    shard ids) of a bounded frame such as one micro-batch. The pin's
-    blocks are not replicated: losing an executor mid-epoch fails the
-    batch, and the stream retries it."""
+    values that ``cols`` (default: ``__bucket``) take in it, None if any
+    is null, observed by the checkpoint's own job. Meant for
+    metadata-sized censuses (bucket or shard ids) of a bounded frame such
+    as one micro-batch. The pin's blocks are not replicated: losing an
+    executor mid-epoch fails the batch, and the stream retries it."""
     obs = Observation()
-    censuses = [
-        F.collect_set(c).alias(f"v{i}") for i, c in enumerate(cols or ["__bucket"])
-    ]
+    censuses = [_census(c, f"v{i}") for i, c in enumerate(cols or ["__bucket"])]
     pinned = df.observe(obs, *censuses).localCheckpoint(eager=True)
-    return pinned, set().union(*obs.get.values())
+    return pinned, set().union(*map(_values, obs.get.values()))
 
 
 def write(df: DataFrame, path: str, dirty: Iterable, col: str = "__bucket") -> set:
@@ -96,17 +107,18 @@ def write(df: DataFrame, path: str, dirty: Iterable, col: str = "__bucket") -> s
     write_text_marker(spark, f"{path}/_schema", df.schema.json())
     obs = Observation()
     (
-        df.observe(obs, F.collect_set(col).alias("present"))
+        df.observe(obs, _census(col, "present"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy(col)
         .parquet(path)
     )
-    present = set(obs.get["present"])
+    present = _values(obs.get["present"])
     # the directory name is built unescaped: right for the integer bucket
     # ids the sweep is used with, not for strings Hive would %-escape
     for value in set(dirty) - present:
-        fs, part, _ = _fs(spark, f"{path}/{col}={value}")
+        name = "__HIVE_DEFAULT_PARTITION__" if value is None else value
+        fs, part, _ = _fs(spark, f"{path}/{col}={name}")
         fs.delete(part, True)
     return present
 
@@ -133,9 +145,10 @@ def merge(
         # partitions written stand in for the census
         return write(combine(delta), path, (), col)
     delta, dirty = pin(delta, col)
-    pool = stored.filter(F.col(col).isin(list(dirty))).unionByName(
-        delta, allowMissingColumns=True
-    )
+    keep = F.col(col).isin([v for v in dirty if v is not None])
+    if None in dirty:  # the null partition is dirty too
+        keep = keep | F.col(col).isNull()
+    pool = stored.filter(keep).unionByName(delta, allowMissingColumns=True)
     write(combine(pool), path, dirty, col)
     return dirty
 

@@ -173,15 +173,186 @@ def test_marker_lost_between_delete_and_rename_still_guards(spark, sf_dir, tmp_p
     process(batch, 1)
     n_rows = spark.read.parquet(f"{out}/dms_sample/nation").count()
     n_dlq = spark.read.json(dlq).count()
-    for marker in (f"{out}/dms_sample/nation/_last_batch", f"{dlq}/_last_batch"):
-        # the crash state: the old marker deleted, the temp file not renamed
-        fs, p, jvm = _fs(spark, marker)
-        assert fs.rename(p, jvm.org.apache.hadoop.fs.Path(marker + ".tmp"))
-        assert not fs.exists(p)
-        assert read_marker(spark, marker) == 1
+    # the one marker that commits the whole fan-out (tables and DLQ)
+    marker = f"{out}/dms_sample/_last_batch"
+    # the crash state: the old marker deleted, the temp file not renamed
+    fs, p, jvm = _fs(spark, marker)
+    assert fs.rename(p, jvm.org.apache.hadoop.fs.Path(marker + ".tmp"))
+    assert not fs.exists(p)
+    assert read_marker(spark, marker) == 1
     process(batch, 1)  # the replay after the crash
     assert spark.read.parquet(f"{out}/dms_sample/nation").count() == n_rows
     assert spark.read.json(dlq).count() == n_dlq
+
+
+#: rows per table and corrupt lines in one ``_mixed_batch``
+_ROWS, _CORRUPT = 6, 2
+
+
+def _mixed_batch(spark, tables):
+    """One parsed micro-batch of a multi-table stream: ``_ROWS`` data
+    records and one control record per table, plus ``_CORRUPT`` corrupt
+    lines. No shuffle, so it adds no job of its own to a write."""
+    from split_kinesis_streams_with_glue_spark.envelope import (
+        control_records,
+        to_json_lines,
+        wrap,
+    )
+    from split_kinesis_streams_with_glue_spark.sources.memory import (
+        parse_envelope_lines,
+    )
+
+    rows = spark.range(_ROWS, numPartitions=2).select(
+        F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
+    )
+    envs = [wrap(rows, t) for t in tables]
+    lines = to_json_lines(envs[0])
+    for env in envs[1:]:
+        lines = lines.unionByName(to_json_lines(env))
+    lines = lines.unionByName(to_json_lines(control_records(spark, tables)))
+    lines = lines.unionByName(
+        spark.createDataFrame([("{not json",), ('{"data": bad',)], "value string")
+    )
+    return parse_envelope_lines(lines, envs[0].schema)
+
+
+def _data_files(d):
+    return [f for f in os.listdir(d) if not f.startswith(("_", "."))]
+
+
+def test_crash_anywhere_in_a_batch_then_replay_lands_it_exactly_once(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after any table's write, after the DLQ write, part way
+    through publishing, or at the commit, then a replay of the same batch
+    id, leaves exactly one copy of the batch in every table and the DLQ,
+    and nothing but data files in their dirs."""
+    from pyspark.sql import DataFrameWriter
+
+    from split_kinesis_streams_with_glue_spark.streaming import markers, split_stream
+
+    tables = ["t0", "t1", "t2", "t3"]
+    batch = _mixed_batch(spark, tables)
+
+    def crash_after(owner, name, k):
+        """``owner.name`` raises right after its k-th call returns."""
+        fn, calls = getattr(owner, name), []
+
+        def crashing(*a, **kw):
+            out = fn(*a, **kw)
+            calls.append(1)
+            if len(calls) == k:
+                raise RuntimeError(f"injected crash after {name} call {k}")
+            return out
+
+        monkeypatch.setattr(owner, name, crashing)
+
+    points = [
+        (DataFrameWriter, "parquet", 1),  # the tables' write (the first table's)
+        (DataFrameWriter, "json", 1),  # the DLQ write
+        (split_stream, "_move", 1),  # publish: first file moved
+        (split_stream, "_move", 5),  # publish: part way through
+        (markers, "write_text_marker", 1),  # the commit
+    ]
+    for i, (owner, name, k) in enumerate(points):
+        out, dlq = str(tmp_path / f"out{i}"), str(tmp_path / f"dlq{i}")
+        process = split_stream.make_batch_processor(
+            out, tables, dlq_dir=dlq, keep_timestamp=False
+        )
+        process(batch, 0)
+        crash_after(owner, name, k)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            process(batch, 1)
+        monkeypatch.undo()
+        process(batch, 1)  # the replay
+        point = f"crash after {name} call {k}"
+        for t in tables:
+            table_dir = f"{out}/dms_sample/{t}"
+            assert spark.read.parquet(table_dir).count() == 2 * _ROWS, (point, t)
+            assert all(f.endswith(".parquet") for f in _data_files(table_dir)), point
+        assert spark.read.json(dlq).count() == 2 * _CORRUPT, point
+        assert all(f.endswith(".json") for f in _data_files(dlq)), point
+        assert not os.path.exists(f"{out}/_staging"), point
+
+
+def test_fresh_batch_reads_and_writes_one_marker(spark, tmp_path, monkeypatch):
+    """The whole fan-out of a batch (four tables and the DLQ) commits
+    through one marker: one marker read and one marker write."""
+    from split_kinesis_streams_with_glue_spark.streaming import markers
+    from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
+        make_batch_processor,
+    )
+
+    tables = ["t0", "t1", "t2", "t3"]
+    batch = _mixed_batch(spark, tables)
+    calls = {"read_text_marker": 0, "write_text_marker": 0}
+    for name in calls:
+        fn = getattr(markers, name)
+
+        def counted(*a, _fn=fn, _name=name, **kw):
+            calls[_name] += 1
+            return _fn(*a, **kw)
+
+        monkeypatch.setattr(markers, name, counted)
+    out, dlq = str(tmp_path / "out"), str(tmp_path / "dlq")
+    make_batch_processor(out, tables, dlq_dir=dlq)(batch, 0)
+    assert calls == {"read_text_marker": 1, "write_text_marker": 1}
+
+
+def test_batch_jobs_do_not_grow_with_the_number_of_tables(spark, tmp_path):
+    """One partitioned write for every table plus the DLQ write: a batch
+    over 8 tables starts as many Spark jobs as a batch over 1."""
+    from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
+        make_batch_processor,
+    )
+
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (1, 8):
+        tables = [f"t{i}" for i in range(n)]
+        batch = _mixed_batch(spark, tables)
+        process = make_batch_processor(
+            str(tmp_path / f"out{n}"), tables, dlq_dir=str(tmp_path / f"dlq{n}")
+        )
+        sc.setJobGroup(f"split-{n}", "split fan-out job count")
+        try:
+            process(batch, 0)
+        finally:
+            sc.setJobGroup(f"split-{n}-done", "")
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(f"split-{n}"))
+    assert jobs[1] == jobs[8] == 2, jobs
+
+
+def test_listed_table_without_rows_reads_as_zero_rows(spark, tmp_path):
+    """A listed table absent from every batch reads as zero rows with the
+    batch's columns; its one schema-only file is written only while the
+    table has no dir."""
+    from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
+        make_batch_processor,
+    )
+
+    out = str(tmp_path / "out")
+    batch = _mixed_batch(spark, ["t0"])
+    process = make_batch_processor(out, ["t0", "ghost"], dlq_dir=str(tmp_path / "dlq"))
+    process(batch, 0)
+    process(batch, 1)
+    ghost = spark.read.parquet(f"{out}/dms_sample/ghost")
+    assert ghost.count() == 0
+    assert ghost.columns == spark.read.parquet(f"{out}/dms_sample/t0").columns
+    assert len(_data_files(f"{out}/dms_sample/ghost")) == 1
+
+
+def test_split_fan_out_commits_through_one_once():
+    """``make_batch_processor`` guards the whole fan-out with exactly one
+    ``once`` marker, not one per output."""
+    import inspect
+    import re
+
+    from split_kinesis_streams_with_glue_spark.streaming.split_stream import (
+        make_batch_processor,
+    )
+
+    assert len(re.findall(r"\bonce\(", inspect.getsource(make_batch_processor))) == 1
 
 
 def test_once_skips_committed_epochs_and_commits_last(spark, tmp_path):
